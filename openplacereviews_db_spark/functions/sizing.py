@@ -35,9 +35,12 @@ import os
 from pyspark.sql import SparkSession
 
 
-def path_bytes(path: str) -> int:
+def path_bytes(path: str) -> int | None:
     """On-disk bytes of a file or directory tree (staged parquet dirs,
-    scale-corpus table directories)."""
+    scale-corpus table directories); ``None`` when the path does not
+    exist, so the caller keeps the unpinned at-scale plan."""
+    if not os.path.exists(path):
+        return None
     if os.path.isfile(path):
         return os.path.getsize(path)
     total = 0
@@ -50,13 +53,13 @@ def path_bytes(path: str) -> int:
     return total
 
 
-def table_bytes(sf_dir: str, table: str) -> int:
+def table_bytes(sf_dir: str, table: str) -> int | None:
     """On-disk bytes of ``<sf_dir>/<table>.parquet`` (file or directory
     of part files — the /tmp scale corpora are directories)."""
     return path_bytes(os.path.join(sf_dir, f"{table}.parquet"))
 
 
-def small_exchange_parts(spark: SparkSession, nbytes: int,
+def small_exchange_parts(spark: SparkSession, nbytes: int | None,
                          per_part_bytes: int = 1 << 20,
                          floor: int = 8) -> int | None:
     """Partition count for a small-input operator's exchanges, or
@@ -67,12 +70,20 @@ def small_exchange_parts(spark: SparkSession, nbytes: int,
     source — i.e. pinning engages only in the regime where r14 measured
     task constants dominating (sub-MB shuffle partitions), and every
     at-scale plan (sf10/sf100 sessions, cluster deployments) is
-    byte-identical to the unpinned form.  ``SPARK_GRAFT_VERIFY_SHUFFLE``
-    overrides (0 = never pin)."""
+    byte-identical to the unpinned form.  ``nbytes=None`` (source not
+    found) keeps the session plan.  ``SPARK_GRAFT_VERIFY_SHUFFLE``
+    overrides (0 = never pin); a non-integer value raises."""
     env = os.environ.get("SPARK_GRAFT_VERIFY_SHUFFLE")
     if env is not None and env != "":
-        n = int(env)
+        try:
+            n = int(env)
+        except ValueError:
+            raise ValueError(
+                "SPARK_GRAFT_VERIFY_SHUFFLE must be an integer partition "
+                f"count (0 = never pin), got {env!r}") from None
         return n if n > 0 else None
+    if nbytes is None:
+        return None
     session = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = max(floor, math.ceil(nbytes / max(per_part_bytes, 1)))
     return None if n >= session else n

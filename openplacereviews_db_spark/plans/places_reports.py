@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions import geo
 from ..sources import places as P
+from ..sources.testdata import load_table
 
 #: the geo report's demo tile prefix: the 2-char OLC area of customer 42
 #: (deterministic; computed with the same closed form as the corpus)
@@ -574,12 +575,11 @@ def g13_hex_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form lat/lon over c_custkey (the s1/geo convention, SQL
     mirror below).
     """
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
     lat = P.synthetic_lat(F.col("c_custkey"))
     lon = P.synthetic_lon(F.col("c_custkey"))
     q = (F.lit(_HEX_A) * lon - F.lit(_HEX_13) * lat) / F.lit(_HEX_SIZE)
     r = (F.lit(_HEX_23) * lat) / F.lit(_HEX_SIZE)
-    base = (spark.read.parquet(f"{sf_dir}/customer.parquet")
+    base = (load_table(spark, "customer", sf_dir)
             .select(F.col("c_custkey").alias("key"),
                     q.alias("q"), r.alias("r")))
     x, z = F.col("q"), F.col("r")

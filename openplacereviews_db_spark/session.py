@@ -101,6 +101,17 @@ def get_spark(app_name: str = "openplacereviews-db-spark",
         # 3 s ↔ 18 s across runs).  Compiled classes are small; cache
         # them all.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
+        # PySpark's call-site capture (default on) wraps every F.*,
+        # Column and DataFrame call with a Python stack walk and four
+        # extra py4j round trips to record the caller's file:line for
+        # error query contexts.  Plan build here is py4j-bound: with it
+        # off, 100 x F.col went 1,300 -> 300 py4j commands (~170 ->
+        # ~40 ms) and the geo_tile_report build 1,093 -> 513 commands
+        # (~260 -> ~180 ms), warm local[4] session on a 4-core VM at
+        # sf0.01.  Errors keep their text and lose only the Python
+        # file:line fragment.  A static conf: to debug with call
+        # sites, set it to "true" in a local builder.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 

@@ -30,28 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import geo
-from .testdata import load_table
-
-#: built corpus DataFrames keyed by (builder, applicationId, sf_dir) —
-#: the closed-form OLC/name expression trees take ~1-2 s to build and
-#: analyze, and a dozen contract queries start from the same frame.
-#: This memoizes the analyzed PLAN (catalog-view-style reuse), never
-#: data: execution still recomputes unless the caller persists.
-_PLAN_MEMO: dict = {}
-
-
-def _memo_plan(fn):
-    def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (fn.__name__, spark.sparkContext.applicationId, sf_dir)
-        df = _PLAN_MEMO.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            _PLAN_MEMO[key] = df
-        return df
-
-    wrapper.__name__ = fn.__name__
-    wrapper.__doc__ = fn.__doc__
-    return wrapper
+from .testdata import load_table, memo_plan
 
 #: one source.tripAdvisor element (TripAdvisorBot.java:58-65: a 2-part
 #: id list [geo-code, detail-code] forming the fetch URL, plus optional
@@ -117,7 +96,7 @@ def synthetic_lon_py(key: int) -> float:
     return ((key * _LON_MUL) % _LON_MOD) / 100.0 - 180.0
 
 
-@_memo_plan
+@memo_plan("customer")
 def synthetic_places(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic `opr.place` corpus derived from `customer`.
 
@@ -250,7 +229,7 @@ def places_sql_cte() -> str:
 _JITTER_DEG = 1e-4
 
 
-@_memo_plan
+@memo_plan("customer")
 def synthetic_active_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Live flat view: one row per live place with merge-relevant fields."""
     c = load_table(spark, "customer", sf_dir)
@@ -270,7 +249,7 @@ def synthetic_active_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_memo_plan
+@memo_plan("customer")
 def synthetic_closed_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closed-place review set: every k % 3 == 0 customer, jittered up to
     ~±100 m, with a name variant exercising each cascade tier:

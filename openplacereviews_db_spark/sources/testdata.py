@@ -7,7 +7,9 @@ documents embeddings — one parquet file per table under
 
 from __future__ import annotations
 
+import functools
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,15 +39,70 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def load_table(spark: SparkSession, name: str,
-               sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+#: One memo for every DataFrame built straight from the sf_dir tables:
+#: the table reads below and the plans derived from them (``memo_plan``).
+#: ``spark.read.parquet`` runs a schema-inference job on every call, and
+#: the derived plans are large expression trees that take seconds of
+#: py4j calls to build, so a request must not redo either.  An entry is
+#: keyed by (builder, source paths) and stamped with the applicationId
+#: and every source's (st_mtime_ns, st_size): a new session or a
+#: rewritten file gets a fresh build.  Only plans are kept, never data;
+#: execution still scans the files unless the caller persists.
+_MEMO: dict = {}
+
+
+def _memo(spark: SparkSession, builder: str, paths: tuple[str, ...],
+          build: Callable[[], DataFrame]) -> DataFrame:
+    try:
+        stats = [os.stat(p) for p in paths]
+    except OSError:
+        return build()  # missing or non-local: Spark reads or reports it
+    stamp = (spark.sparkContext.applicationId,
+             *((st.st_mtime_ns, st.st_size) for st in stats))
+    hit = _MEMO.get((builder, paths))
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    df = build()
+    _MEMO[(builder, paths)] = (stamp, df)
+    return df
+
+
+def _table_path(name: str, sf_dir: str) -> str:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def load_raw_table(spark: SparkSession, name: str,
+                   sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+    """The table as stored, events.ts in its on-disk type (a stream
+    takes its schema from here, see ``normalize_events_ts``)."""
+    path = _table_path(name, sf_dir)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_events_ts(spark.read.parquet(path))
-    return spark.read.parquet(path)
+    return _memo(spark, "parquet", (path,), lambda: spark.read.parquet(path))
+
+
+def load_table(spark: SparkSession, name: str,
+               sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+    raw = load_raw_table(spark, name, sf_dir)
+    if name != "events":
+        return raw
+    return _memo(spark, "events", (_table_path(name, sf_dir),),
+                 lambda: normalize_events_ts(raw))
+
+
+def memo_plan(*tables: str):
+    """Decorator: memoize a ``(spark, sf_dir) -> DataFrame`` builder
+    derived from ``tables`` in the same memo as the table reads."""
+    def deco(fn):
+        @functools.wraps(fn)
+        def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
+            paths = tuple(_table_path(t, sf_dir) for t in tables)
+            return _memo(spark, f"{fn.__module__}.{fn.__name__}", paths,
+                         lambda: fn(spark, sf_dir))
+        return wrapper
+    return deco
 
 
 def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

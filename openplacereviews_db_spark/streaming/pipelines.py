@@ -275,17 +275,13 @@ def _stream_events_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events.ts has shipped both as TIMESTAMP(NANOS) and TIMESTAMP(MICROS)
     across driver testdata generations; a stream needs its schema
-    declared up front, so take it from a batch footer read of the same
-    file and route the result through the SAME type-branched conversion
-    as the batch loader (sources/testdata.py:normalize_events_ts) — the
-    two paths can never diverge again."""
-    import os
+    declared up front, so take it from the memoized batch read of the
+    same file and route the result through the SAME type-branched
+    conversion as the batch loader (sources/testdata.py:normalize_events_ts)
+    — the two paths can never diverge again."""
+    from ..sources.testdata import load_raw_table, normalize_events_ts
 
-    from ..sources.testdata import normalize_events_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = load_raw_table(spark, "events", sf_dir).schema
     # the file source requires a directory; narrow it to the events file
     src = (spark.readStream.format("parquet").schema(schema)
            .option("pathGlobFilter", "events.parquet").load(sf_dir))
@@ -1049,10 +1045,10 @@ def enrich_stream_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold.  Aggregated per (segment, event_type) so the result is
     the exact batch join+rollup — the oracle.  Value millis are
     floor-quantized BIGINT (engine-exact summation)."""
-    ev = _stream_events_parquet(spark, sf_dir)
-    import os
+    from ..sources.testdata import load_table
 
-    dim = (spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
+    ev = _stream_events_parquet(spark, sf_dir)
+    dim = (load_table(spark, "customer", sf_dir)
            .select(F.col("c_custkey").alias("user_id"),
                    F.col("c_mktsegment").alias("segment")))
     joined = ev.join(dim, "user_id")  # stream ⋈ static

@@ -249,9 +249,9 @@ def test_plan_build_runs_no_computation_jobs(spark, sf_dir):
     Memoized plans are cleared first so every builder really runs;
     streaming ``st_*`` runners execute by design and are excluded, as
     everywhere else in this audit."""
-    from openplacereviews_db_spark.sources import places
+    from openplacereviews_db_spark.sources import testdata
 
-    places._PLAN_MEMO.clear()
+    testdata._MEMO.clear()
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     offenders = []
@@ -272,6 +272,26 @@ def test_plan_build_runs_no_computation_jobs(spark, sf_dir):
         f"computation jobs ran during plan construction — these "
         f"queries() builders are eager: {offenders}"
     )
+
+
+@pytest.mark.parametrize("name", [
+    "geo_tile_report", "geoall_area_summary", "g8_zcell_scan",
+    "g13_hex_bin", "p7_review_candidates", "dd_minhash_lsh",
+    "s15_merge_upsert"])
+def test_rebuild_launches_no_jobs(name, spark, sf_dir):
+    """A request's second build reuses the memoized table reads and
+    corpus plans (sources/testdata.py), so it launches no job at all,
+    not even parquet schema inference."""
+    build = entrymod.queries()[name]
+    build(spark, sf_dir)
+    sc = spark.sparkContext
+    group = f"rebuild-audit-{name}"
+    sc.setJobGroup(group, "rebuild job audit")
+    try:
+        build(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
 
 
 def test_minhash_single_shuffle_to_per_doc_state(spark, sf_dir):

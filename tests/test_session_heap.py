@@ -60,3 +60,10 @@ def test_release_shuffles_frees_finished_query_files(spark):
     freed = release_shuffles(spark)
     after = blockmgr_bytes(spark)
     assert freed >= 0.7 * (peak - base), (base, peak, freed, after)
+
+
+def test_call_site_capture_is_off(spark):
+    """Plan build is py4j-bound; call-site capture about doubles a
+    build's py4j commands (session.py)."""
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"

@@ -56,6 +56,25 @@ def test_table_bytes_file_and_dir(tmp_path):
     assert sizing.table_bytes(str(tmp_path), "orders") == 77
 
 
+def test_bad_env_value_names_the_variable(spark, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_VERIFY_SHUFFLE", "eight")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_VERIFY_SHUFFLE"):
+        sizing.small_exchange_parts(spark, 10_000)
+
+
+def test_missing_path_keeps_unpinned_plan(spark, tmp_path, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_VERIFY_SHUFFLE", raising=False)
+    assert sizing.path_bytes(str(tmp_path / "absent")) is None
+    assert sizing.table_bytes(str(tmp_path), "documents") is None
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        # at 32 session partitions, a 0-byte answer would pin to 8
+        assert sizing.small_exchange_parts(
+            spark, sizing.table_bytes(str(tmp_path), "documents")) is None
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+
+
 @pytest.fixture()
 def _verify_inputs(spark):
     cand = spark.createDataFrame(

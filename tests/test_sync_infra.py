@@ -210,6 +210,32 @@ def test_staging_rebuilds_on_source_refresh(spark, tmp_path):
     assert s5_staged_scan(spark, sf).collect()[0]["n"] == 4
 
 
+def test_load_table_rereads_rewritten_file(spark, tmp_path):
+    """load_table and the plans memoized on a table serve the memoized
+    DataFrame until the source file is rewritten, then read it afresh
+    (the memo is stamped with the file's mtime and size)."""
+    from openplacereviews_db_spark.sources import places
+    from openplacereviews_db_spark.sources.testdata import load_table
+
+    sf = _mini_sf_dir(tmp_path, [2, 4, 6])
+    cust = load_table(spark, "customer", sf)
+    assert load_table(spark, "customer", sf) is cust
+    assert sorted(r["c_custkey"] for r in cust.collect()) == [2, 4, 6]
+    assert places.synthetic_places(spark, sf).count() == 3
+    ev = load_table(spark, "events", sf)
+    assert ev.schema["ts"].dataType.typeName() == "timestamp"
+
+    _mini_sf_dir(tmp_path, [8, 10, 12, 14])
+
+    assert sorted(r["c_custkey"] for r in
+                  load_table(spark, "customer", sf).collect()) == \
+        [8, 10, 12, 14]
+    assert places.synthetic_places(spark, sf).count() == 4
+    assert sorted(r["event_id"] for r in
+                  load_table(spark, "events", sf).collect()) == \
+        [8, 10, 12, 14]
+
+
 def test_compact_dir_reduces_files_losslessly(spark, tmp_path):
     """X63: compaction must cut the file count to the byte-target
     bound and preserve content exactly (row multiset equality)."""
