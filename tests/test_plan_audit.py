@@ -402,6 +402,17 @@ def test_driver_priority_names_resolve():
     assert not stale, stale
 
 
+def test_fixture_query_registers_with_fixtures():
+    """m12_fixture_verdicts is registered, with its oracle, exactly when
+    the reference merge corpus is present: a corpus that is there but
+    fails to load must not drop the query silently."""
+    from openplacereviews_db_spark.sources import ref_fixtures
+
+    present = ref_fixtures.fixtures_available()
+    assert ("m12_fixture_verdicts" in entrymod.queries()) == present
+    assert ("m12_fixture_verdicts" in entrymod.oracle_sql()) == present
+
+
 #: documented plan-shape claims for the scoring operators: the physical
 #: plan must actually carry the property the docstring advertises
 def test_classifier_is_zero_shuffle(spark, sf_dir):
