@@ -207,11 +207,6 @@ def grid_tile(lat: Column, lon: Column, cell_deg: float = 0.05) -> Column:
     return F.concat_ws(":", x, y)
 
 
-def grid_tile_sql(lat: str, lon: str, cell_deg: float = 0.05) -> str:
-    return (f"(CAST(floor(({lon} + 180.0) / {cell_deg}) AS BIGINT) || ':' || "
-            f"CAST(floor(({lat} + 90.0) / {cell_deg}) AS BIGINT))")
-
-
 def tile_neighbors(lat: Column, lon: Column, cell_deg: float = 0.05) -> Column:
     """array<string> of the 9 tiles around (lat, lon) — explode on the build
     side of a distance join for border-correct candidate generation."""

@@ -120,16 +120,6 @@ def zorder_interleave_sql(qx: str, qy: str, bits: int = 16) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def normalize_lon(lon: Column) -> Column:
-    """Wrap into [-180, 180) (OsmMapUtils.checkLongitude analog)."""
-    return ((lon + 180.0) % 360.0 + 360.0) % 360.0 - 180.0
-
-
-def normalize_lat(lat: Column) -> Column:
-    """Clamp into [-90, 90] (OsmMapUtils.checkLatitude analog)."""
-    return F.least(F.lit(90.0), F.greatest(F.lit(-90.0), lat))
-
-
 def orthogonal_distance_deg(px: Column, py: Column, ax: Column, ay: Column,
                             bx: Column, by: Column) -> Column:
     """Perpendicular distance (planar, in coordinate units) from P to

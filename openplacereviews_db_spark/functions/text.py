@@ -43,10 +43,6 @@ def simple_name(name: Column) -> Column:
     return F.lower(F.regexp_replace(name, r"[ \-]", ""))
 
 
-def simple_name_sql(name: str) -> str:
-    return f"lower(regexp_replace({name}, '[ -]', '', 'g'))"
-
-
 def tokenize_words(name: Column) -> Column:
     """array<string> of words: split on whitespace, trim punctuation from
     both ends of each word, drop empties (MergeUtil.java:243-252)."""

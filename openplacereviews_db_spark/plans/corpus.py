@@ -878,7 +878,6 @@ def _staged_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the stale-cache rule); ``dd_dup_groups`` itself stays a live CC
     run, so the contraction loop remains driver-checked every round."""
     import os
-    import tempfile
 
     from ..operators.components import dedup_groups
     from ..sources import staging
@@ -909,7 +908,7 @@ def _staged_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return staging.stage_raw(
         spark, build,
-        os.path.join(tempfile.gettempdir(), "opr_spark_stage"), cid,
+        staging.stage_root(), cid,
         prune_prefix=prefix)
 
 
@@ -2053,7 +2052,6 @@ def dd_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     lets ingest cost track batch size instead of corpus size.
     """
     import os
-    import tempfile
 
     from ..operators import dedup as dd
     from ..sources import staging
@@ -2075,7 +2073,7 @@ def dd_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     def bands_of(pd: DataFrame) -> DataFrame:
         return dd.lsh_band_rows(pd, num_hashes, bands_n)
 
-    stage_root = os.path.join(tempfile.gettempdir(), "opr_spark_stage")
+    stage_root = staging.stage_root()
     idx_name = f"ndindex2_{tag}"
     idx_root = os.path.join(stage_root, idx_name)
     bands_dir = os.path.join(idx_root, "bands")

@@ -29,7 +29,7 @@ from ..functions import geo
 from ..operators import changelog as C
 from ..operators import cluster
 from ..sources import places as P
-from ..sources.testdata import load_table, memo_plan
+from ..sources.testdata import load_table, stage_plan
 
 TOMBSTONE = "2021-06-15T00:00:00"
 WINDOW_START, WINDOW_END = "2021-06-05", "2021-06-20"
@@ -45,7 +45,7 @@ _PLACE_DOC_DDL = (
     "deleted:string>>>,deleted:string>")
 
 
-@memo_plan("customer")
+@stage_plan("customer")
 def synthetic_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic operations corpus over the place ids:
 

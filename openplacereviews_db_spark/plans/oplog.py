@@ -16,7 +16,6 @@ tables:
 from __future__ import annotations
 
 import os
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -97,7 +96,7 @@ def _oplog_stage(spark: SparkSession, sf_dir: str) -> str:
     fp = (f"{staging.source_fingerprint(sf_dir, 'orders')}_"
           f"{staging.source_fingerprint(sf_dir, 'lineitem')}")
     base = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage")
+    root = staging.stage_root()
     name = f"oplog_{base}_{fp}"
     data_dir = os.path.join(root, name, "data")
     if not os.path.isfile(os.path.join(data_dir, "_SUCCESS")):

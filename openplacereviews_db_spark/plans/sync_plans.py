@@ -18,7 +18,6 @@ proves the staging roundtrip is lossless.
 from __future__ import annotations
 
 import os
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -44,7 +43,7 @@ def _prune_stage(family: str, sf_dir: str, keep: str) -> None:
     build proves every other fingerprint is a stale full copy leaking
     on /tmp (r12 ADVICE; see staging.prune_stale_siblings)."""
     staging.prune_stale_siblings(
-        os.path.join(tempfile.gettempdir(), "opr_spark_stage"),
+        staging.stage_root(),
         f"{family}_{os.path.basename(os.path.normpath(sf_dir))}_",
         keep)
 
@@ -128,7 +127,7 @@ def s5_staged_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         name=(f"events-{os.path.basename(os.path.normpath(sf_dir))}"
               f"-{staging.source_fingerprint(sf_dir, 'events')}"),
         date="2021-06-01", bbox=(-180.0, -90.0, 180.0, 90.0))
-    cache_dir = os.path.join(tempfile.gettempdir(), "opr_spark_stage")
+    cache_dir = staging.stage_root()
 
     def fetch() -> DataFrame:
         return load_table(spark, "events", sf_dir).select(
@@ -325,8 +324,7 @@ def _osm_stage_file(sf_dir: str) -> str:
     (mapInPandas parse path) and s19 (DataSource connector path)."""
     tag = (os.path.basename(os.path.normpath(sf_dir))
            + "_" + staging.source_fingerprint(sf_dir, "customer"))
-    path = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"osm_src_{tag}.osm")
+    path = os.path.join(staging.stage_root(), f"osm_src_{tag}.osm")
     if not os.path.exists(path):
         import pyarrow.parquet as pq
 
@@ -417,8 +415,7 @@ def s2_diff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mtime+size-keyed like s1 — see the CLAUDE.md stale-cache rule
     tag = (os.path.basename(os.path.normpath(sf_dir))
            + "_" + staging.source_fingerprint(sf_dir, "customer"))
-    path = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"osm_diff_{tag}.osm")
+    path = os.path.join(staging.stage_root(), f"osm_diff_{tag}.osm")
     if not os.path.exists(path):
         import pyarrow.parquet as pq
 
@@ -499,8 +496,7 @@ def x22_bucketed_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     write_bucketed)
 
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    loc = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                       "bucketdb")
+    loc = os.path.join(staging.stage_root(), "bucketdb")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS oprbuck LOCATION '{loc}'")
     idx_t, lk_t = f"oprbuck.osmid_index_{tag}", f"oprbuck.lookup_{tag}"
     if not ensure_fresh_bucketed(spark, loc, idx_t, lk_t):
@@ -595,7 +591,6 @@ def s17_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch split from the original events table with an explicit NULL
     projection, so it never depends on the staged files."""
     import os
-    import tempfile
 
     # Cache key includes the source parquet's mtime+size: driver
     # testdata drifts between rounds (events.ts NANOS->MICROS in r3),
@@ -605,8 +600,7 @@ def s17_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = os.stat(src)
     tag = (f"{os.path.basename(os.path.normpath(sf_dir))}"
            f"_{int(st.st_mtime)}_{st.st_size}")
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"schema_evo_{tag}")
+    root = os.path.join(staging.stage_root(), f"schema_evo_{tag}")
     if not (os.path.isfile(os.path.join(root, "batch_a.parquet"))
             and os.path.isfile(os.path.join(root, "batch_b.parquet"))):
         import pyarrow.compute as pc
@@ -751,8 +745,7 @@ def x63_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     EAGER_BUILD_OK like the other index builders."""
     fp = staging.source_fingerprint(sf_dir, "events")
     tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}"
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"compact_{tag}")
+    root = os.path.join(staging.stage_root(), f"compact_{tag}")
     small = os.path.join(root, "small")
     packed = os.path.join(root, "packed")
     if not os.path.isfile(os.path.join(small, "_SUCCESS")):
@@ -793,8 +786,7 @@ def _partgrid_stage(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
 
     fp = staging.source_fingerprint(sf_dir, "events")
     tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}"
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"partgrid_{tag}")
+    root = os.path.join(staging.stage_root(), f"partgrid_{tag}")
     data_dir = os.path.join(root, "data")
     meta_path = os.path.join(root, "meta.json")
     if not os.path.isfile(meta_path):
@@ -932,8 +924,7 @@ def x75_smb_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     write_bucketed)
 
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    loc = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                       "bucketdb")
+    loc = os.path.join(staging.stage_root(), "bucketdb")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS oprbuck LOCATION '{loc}'")
     o_t, l_t = f"oprbuck.orders_{tag}", f"oprbuck.lineitem_{tag}"
     if not ensure_fresh_bucketed(spark, loc, o_t, l_t):
@@ -999,8 +990,7 @@ def s18_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     fp = staging.source_fingerprint(sf_dir, "customer")
     tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}"
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"formats_{tag}")
+    root = os.path.join(staging.stage_root(), f"formats_{tag}")
     csv_dir = os.path.join(root, "csv")
     json_dir = os.path.join(root, "json")
     cust = load_table(spark, "customer", sf_dir).select(
@@ -1083,8 +1073,7 @@ def s20_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     fp = staging.source_fingerprint(sf_dir, "customer")
     tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}"
-    orc_dir = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                           f"orc_{tag}")
+    orc_dir = os.path.join(staging.stage_root(), f"orc_{tag}")
     cust = load_table(spark, "customer", sf_dir).select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment")
     if not os.path.isfile(os.path.join(orc_dir, "_SUCCESS")):
@@ -1143,8 +1132,7 @@ def s21_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fp = staging.source_fingerprint(sf_dir, "customer")
     tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}"
-    path = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"badjson_{tag}", "rows.jsonl")
+    path = os.path.join(staging.stage_root(), f"badjson_{tag}", "rows.jsonl")
     if not os.path.isfile(path):
         import pyarrow.parquet as pq
 

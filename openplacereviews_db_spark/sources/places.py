@@ -13,7 +13,10 @@ IEEE-double division + closed-form OLC), so the exact same rows are
 derivable in DuckDB SQL — ``PLACES_SQL_CTE`` is that mirror, giving
 every geo-report plan a value-exact oracle.  The reference's random id
 suffix (``OsmLocationTool.java:97``) is replaced by a deterministic
-md5-derived suffix (SURVEY.md §7 "deterministic-id mode").
+md5-derived suffix (SURVEY.md §7 "deterministic-id mode").  Like the
+reference's stored ``obj_opr_places`` table, the derived frames are
+written once to parquet (``testdata.stage_plan``) and every read scans
+the stored copy; the oracles keep deriving from ``customer``.
 
 Layout decisions for 100 TB:
 - the corpus is keyed and (at scale) partitioned by ``tile_id`` — every
@@ -30,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import geo
-from .testdata import load_table, memo_plan
+from .testdata import load_table, stage_plan
 
 #: one source.tripAdvisor element (TripAdvisorBot.java:58-65: a 2-part
 #: id list [geo-code, detail-code] forming the fetch URL, plus optional
@@ -96,7 +99,7 @@ def synthetic_lon_py(key: int) -> float:
     return ((key * _LON_MUL) % _LON_MOD) / 100.0 - 180.0
 
 
-@memo_plan("customer")
+@stage_plan("customer")
 def synthetic_places(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic `opr.place` corpus derived from `customer`.
 
@@ -229,7 +232,7 @@ def places_sql_cte() -> str:
 _JITTER_DEG = 1e-4
 
 
-@memo_plan("customer")
+@stage_plan("customer")
 def synthetic_active_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Live flat view: one row per live place with merge-relevant fields."""
     c = load_table(spark, "customer", sf_dir)
@@ -249,7 +252,7 @@ def synthetic_active_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@memo_plan("customer")
+@stage_plan("customer")
 def synthetic_closed_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closed-place review set: every k % 3 == 0 customer, jittered up to
     ~±100 m, with a name variant exercising each cascade tier:

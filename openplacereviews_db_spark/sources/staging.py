@@ -15,9 +15,17 @@ can do).
 from __future__ import annotations
 
 import os
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def stage_root() -> str:
+    """The directory under the temp dir (``TMPDIR``) that holds every
+    write-once staged artifact."""
+    return os.path.join(tempfile.gettempdir(), "opr_spark_stage")
 
 
 def cache_id(name: str, date: str,
@@ -98,7 +106,8 @@ def prune_stale_siblings(root: str, prefix: str, keep: str,
 
 def stage_raw(spark: SparkSession, fetch: Callable[[], DataFrame],
               cache_dir: str, cid: str,
-              prune_prefix: str | None = None) -> DataFrame:
+              prune_prefix: str | None = None,
+              schema: StructType | None = None) -> DataFrame:
     """Write-once staging: if ``cache_dir/cid`` holds a completed
     parquet write (``_SUCCESS`` marker), read it; otherwise run
     ``fetch()`` once, stage its result, and read the staged copy.
@@ -106,7 +115,9 @@ def stage_raw(spark: SparkSession, fetch: Callable[[], DataFrame],
     Always returns the STAGED frame, so downstream plans scan parquet
     (splittable, column-prunable) regardless of what the fetch source
     was — the exact role of the reference's .osm.gz cache, minus its
-    single-reader gzip bottleneck.
+    single-reader gzip bottleneck.  A caller that knows the staged
+    ``schema`` passes it, and the read-back skips Spark's
+    schema-inference job.
     """
     name = cid.replace("/", "_")
     path = os.path.join(cache_dir, name)
@@ -118,7 +129,8 @@ def stage_raw(spark: SparkSession, fetch: Callable[[], DataFrame],
         # age guard then, and no later build would ever re-prune it
         # (r13 review) — the listdir is pennies
         prune_stale_siblings(cache_dir, prune_prefix, name)
-    return spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def compact_dir(spark: SparkSession, src_dir: str, dest_dir: str,

@@ -8,10 +8,14 @@ documents embeddings — one parquet file per table under
 from __future__ import annotations
 
 import functools
+import hashlib
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from . import staging
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -40,7 +44,7 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
 
 #: One memo for every DataFrame built straight from the sf_dir tables:
-#: the table reads below and the plans derived from them (``memo_plan``).
+#: the table reads below and the staged derivations (``stage_plan``).
 #: ``spark.read.parquet`` runs a schema-inference job on every call, and
 #: the derived plans are large expression trees that take seconds of
 #: py4j calls to build, so a request must not redo either.  An entry is
@@ -92,21 +96,75 @@ def load_table(spark: SparkSession, name: str,
                  lambda: normalize_events_ts(raw))
 
 
-def memo_plan(*tables: str):
-    """Decorator: memoize a ``(spark, sf_dir) -> DataFrame`` builder
-    derived from ``tables`` in the same memo as the table reads."""
+#: ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH, the largest value
+#: ``spark.sql.maxPlanStringLength`` accepts: no truncation
+_PLAN_LEN_UNCAPPED = str(2 ** 31 - 16)
+
+
+def plan_digest(spark: SparkSession, df: DataFrame) -> str:
+    """sha256 of ``df``'s analyzed plan, stable across sessions and
+    JVMs: the whole tree (no ``spark.sql.maxPlanStringLength`` or
+    ``maxToStringFields`` truncation), expression ids stripped and
+    lambda variables renumbered by first appearance (their JVM-wide
+    counter depends on what the session built before)."""
+    conf = spark.conf
+    cap = conf.get("spark.sql.maxPlanStringLength")
+    conf.set("spark.sql.maxPlanStringLength", _PLAN_LEN_UNCAPPED)
+    try:
+        text = df._jdf.queryExecution().analyzed().treeString(
+            False, False, 2 ** 31 - 1, False, False)
+    finally:
+        conf.set("spark.sql.maxPlanStringLength", cap)
+    seen: dict[str, int] = {}
+    text = re.sub(
+        r"lambda (\w+?)_\d+#\d+",
+        lambda m: f"lambda {m[1]}_{seen.setdefault(m[0], len(seen))}", text)
+    text = re.sub(r"#\d+", "", text)
+    return hashlib.sha256(text.encode()).hexdigest()
+
+
+def stage_plan(*tables: str):
+    """Decorator for a ``(spark, sf_dir) -> DataFrame`` derivation from
+    ``tables``: the derived frame is written once to parquet under
+    ``staging.stage_root()`` and every call reads the staged copy,
+    memoized in ``_MEMO`` like the table reads.
+
+    The stage directory is keyed on the source paths, each source's
+    (st_mtime_ns, st_size) and :func:`plan_digest` of the derivation,
+    so neither a rewritten source nor an edited derivation serves a
+    stale stage; superseded stages of the same sources are pruned
+    (``staging.prune_stale_siblings``).  The derivation must be pure Catalyst
+    expressions over session-independent confs: a Python UDF's body is
+    not in the plan text."""
     def deco(fn):
+        name = fn.__name__
+
         @functools.wraps(fn)
         def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
             paths = tuple(_table_path(t, sf_dir) for t in tables)
-            return _memo(spark, f"{fn.__module__}.{fn.__name__}", paths,
-                         lambda: fn(spark, sf_dir))
+
+            def build() -> DataFrame:
+                derived = fn(spark, sf_dir)
+                try:
+                    stats = [os.stat(p) for p in paths]
+                except OSError:
+                    return derived  # Spark reads or reports the source
+                # a stage is stale only against a newer one of the same
+                # sources: other sf dirs may be live in other sessions
+                sources = hashlib.sha256("|".join(
+                    os.path.abspath(p) for p in paths).encode())
+                prefix = f"{name}-{sources.hexdigest()[:12]}-"
+                key = hashlib.sha256(plan_digest(spark, derived).encode())
+                for st in stats:
+                    key.update(f"|{st.st_mtime_ns}|{st.st_size}".encode())
+                return staging.stage_raw(
+                    spark, lambda: derived, staging.stage_root(),
+                    prefix + key.hexdigest()[:20],
+                    prune_prefix=prefix, schema=derived.schema)
+
+            return _memo(spark, f"{fn.__module__}.{name}", paths, build)
         return wrapper
     return deco
-
-
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, sf_dir) for t in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:

@@ -28,6 +28,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import staging
+
 #: schema of the driver's events table, as a streaming source
 EVENTS_DDL = ("event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
@@ -372,14 +374,12 @@ def _stage_time_nsplit(sf_dir: str, prefix: str, n: int) -> tuple[str, str]:
     rule); ts pre-normalized to epoch-micros BIGINT like
     ``_stage_time_split``."""
     import os
-    import tempfile
 
     src_parquet = os.path.join(sf_dir, "events.parquet")
     st = os.stat(src_parquet)
     tag = (f"v1n{n}_{os.path.basename(os.path.normpath(sf_dir))}"
            f"_{int(st.st_mtime)}_{st.st_size}")
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"{prefix}_{tag}")
+    root = os.path.join(staging.stage_root(), f"{prefix}_{tag}")
     src = os.path.join(root, "src")
     if not _stage_is_complete(root):
         import shutil as _sh
@@ -489,7 +489,6 @@ def _stage_parity_split(sf_dir: str, prefix: str) -> tuple[str, str]:
     ``(root, src)``; pyarrow IO only, so plan construction stays lazy.
     """
     import os
-    import tempfile
 
     src_parquet = os.path.join(sf_dir, "documents.parquet")
     st = os.stat(src_parquet)
@@ -497,8 +496,7 @@ def _stage_parity_split(sf_dir: str, prefix: str) -> tuple[str, str]:
     # cached dir with the old unprefixed names out of reuse
     tag = (f"v2_{os.path.basename(os.path.normpath(sf_dir))}"
            f"_{int(st.st_mtime)}_{st.st_size}")
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"{prefix}_{tag}")
+    root = os.path.join(staging.stage_root(), f"{prefix}_{tag}")
     src = os.path.join(root, "src")
     if not _stage_is_complete(root):
         import shutil as _sh
@@ -526,14 +524,12 @@ def _stage_parity_split(sf_dir: str, prefix: str) -> tuple[str, str]:
 
 def _prune_stale_stage(root: str, tag: str) -> None:
     """Drop superseded write-once split stages: ``root`` is
-    ``/tmp/opr_spark_stage/{prefix}_{tag}`` with ``tag`` ending in the
+    ``staging.stage_root()/{prefix}_{tag}`` with ``tag`` ending in the
     source parquet's ``{mtime}_{size}`` fingerprint; a fresh build
     proves every same-prefix sibling with a different fingerprint is a
     stale full copy of the staged feed leaking on /tmp (r12 ADVICE —
     the disk-pressure class release_shuffles exists to fight)."""
     import os
-
-    from ..sources import staging
 
     name = os.path.basename(root)
     fp = "_".join(tag.split("_")[-2:])  # "<mtime>_<size>"
@@ -586,13 +582,22 @@ def _batch_shuffle_partitions(spark: SparkSession, src: str) -> int:
     (``_run_to_memory`` ``state_partitions``; measured r14 interleaved
     A/B at sf0.1: st_neardup_pairs 7.2 -> 6.1 s, values identical).
     ``SPARK_GRAFT_STREAM_SHUFFLE`` overrides for cluster deployments
-    where the per-batch volume is known better than a file size."""
+    where the per-batch volume is known better than a file size; a
+    value that is not a positive integer raises."""
     import math
     import os
 
     env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
     if env:
-        return int(env)
+        try:
+            n = int(env)
+        except ValueError:
+            n = 0
+        if n <= 0:
+            raise ValueError(
+                "SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer "
+                f"partition count, got {env!r}")
+        return n
     try:
         biggest = max((os.path.getsize(os.path.join(src, f))
                        for f in os.listdir(src)
@@ -950,14 +955,12 @@ def _stage_events_split(sf_dir: str, prefix: str) -> tuple[str, str]:
     keyed on the source parquet's mtime+size (the CLAUDE.md
     stale-cache rule); pyarrow IO only, plan construction stays lazy."""
     import os
-    import tempfile
 
     src_parquet = os.path.join(sf_dir, "events.parquet")
     st = os.stat(src_parquet)
     tag = (f"v2_{os.path.basename(os.path.normpath(sf_dir))}"
            f"_{int(st.st_mtime)}_{st.st_size}")
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"{prefix}_{tag}")
+    root = os.path.join(staging.stage_root(), f"{prefix}_{tag}")
     src = os.path.join(root, "src")
     if not _stage_is_complete(root):
         import shutil as _sh
@@ -1124,14 +1127,12 @@ def _stage_time_split(sf_dir: str, prefix: str) -> tuple[str, str]:
     NANOS/MICROS drift.  Cache keyed on source mtime+size; sequence-
     prefixed names + pinned mtimes per the split-order discipline."""
     import os
-    import tempfile
 
     src_parquet = os.path.join(sf_dir, "events.parquet")
     st = os.stat(src_parquet)
     tag = (f"v2_{os.path.basename(os.path.normpath(sf_dir))}"
            f"_{int(st.st_mtime)}_{st.st_size}")
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"{prefix}_{tag}")
+    root = os.path.join(staging.stage_root(), f"{prefix}_{tag}")
     src = os.path.join(root, "src")
     if not _stage_is_complete(root):
         import shutil as _sh

@@ -60,7 +60,8 @@ def main() -> None:
            "m7_migrate_ids", "m12_fixture_verdicts", "j3_border_correct",
            "j7_history_full_check"]
     builds: dict[str, list[float]] = {}
-    for name in fam:
+    # m12_fixture_verdicts registers only with the reference checkout
+    for name in (n for n in fam if n in qs):
         ts = []
         for _ in range(2):
             t0 = time.time()

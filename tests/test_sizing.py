@@ -62,6 +62,29 @@ def test_bad_env_value_names_the_variable(spark, monkeypatch):
         sizing.small_exchange_parts(spark, 10_000)
 
 
+@pytest.mark.parametrize("value", ["abc", "0", "-3", "2.5"])
+def test_bad_stream_shuffle_names_the_variable(spark, tmp_path,
+                                               monkeypatch, value):
+    from openplacereviews_db_spark.streaming.pipelines import (
+        _batch_shuffle_partitions)
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", value)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_SHUFFLE"):
+        _batch_shuffle_partitions(spark, str(tmp_path))
+
+
+def test_stream_shuffle_override_and_default(spark, tmp_path, monkeypatch):
+    from openplacereviews_db_spark.streaming.pipelines import (
+        _batch_shuffle_partitions)
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "12")
+    assert _batch_shuffle_partitions(spark, str(tmp_path)) == 12
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE")
+    (tmp_path / "part-0.parquet").write_bytes(b"x" * 100)
+    # a tiny batch file sizes to the floor
+    assert _batch_shuffle_partitions(spark, str(tmp_path)) == 8
+
+
 def test_missing_path_keeps_unpinned_plan(spark, tmp_path, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_VERIFY_SHUFFLE", raising=False)
     assert sizing.path_bytes(str(tmp_path / "absent")) is None

@@ -236,6 +236,65 @@ def test_load_table_rereads_rewritten_file(spark, tmp_path):
         [8, 10, 12, 14]
 
 
+def test_stage_plan_writes_once(spark, tmp_path, monkeypatch):
+    """The place corpus is a write-once stored table
+    (testdata.stage_plan): the first build writes one stage, a rebuild
+    in a fresh memo reads it back and writes nothing, and a rewritten
+    customer.parquet gets a new stage holding the new values, equal to
+    the closed-form derivation.  Pruning removes only superseded stages
+    of the same sources, never an old stage of another sf dir."""
+    import os
+    import tempfile
+    import time
+
+    from openplacereviews_db_spark.sources import places, testdata
+
+    (tmp_path / "tmp").mkdir()
+    (tmp_path / "sf").mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    root = staging.stage_root()
+    sf = _mini_sf_dir(tmp_path / "sf", [2, 4, 6])
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    testdata._MEMO.clear()
+    first = places.synthetic_places(spark, sf)
+    stages = os.listdir(root)
+    assert len(stages) == 1 and stages[0].startswith("synthetic_places-")
+    assert all(f"/{stages[0]}/" in f for f in first.inputFiles())
+    derived = places.synthetic_places.__wrapped__(spark, sf)
+    assert rows(first) == rows(derived)
+    success = os.path.join(root, stages[0], "_SUCCESS")
+    written = os.stat(success).st_mtime_ns
+
+    testdata._MEMO.clear()
+    again = places.synthetic_places(spark, sf)
+    assert os.listdir(root) == stages
+    assert os.stat(success).st_mtime_ns == written
+    assert rows(again) == rows(first)
+
+    # an hour-old stage of other sources is not a stale sibling: a
+    # session over that sf dir may still scan it
+    hour_ago = time.time() - 7200
+    os.utime(os.path.join(root, stages[0]), (hour_ago, hour_ago))
+    (tmp_path / "sf2").mkdir()
+    other = places.synthetic_places(
+        spark, _mini_sf_dir(tmp_path / "sf2", [1]))
+    assert stages[0] in os.listdir(root)
+
+    _mini_sf_dir(tmp_path / "sf", [8, 10, 12, 14])
+    fresh = places.synthetic_places(spark, sf)
+    new = sorted(set(os.listdir(root)) - set(stages)
+                 - {f.split("/")[-2] for f in other.inputFiles()})
+    assert len(new) == 1 and new[0].startswith("synthetic_places-")
+    assert all(f"/{new[0]}/" in f for f in fresh.inputFiles())
+    assert fresh.count() == 4
+    assert rows(fresh) == rows(places.synthetic_places.__wrapped__(spark, sf))
+    # the superseded stage of the rewritten source is pruned
+    assert stages[0] not in os.listdir(root)
+
+
 def test_compact_dir_reduces_files_losslessly(spark, tmp_path):
     """X63: compaction must cut the file count to the byte-target
     bound and preserve content exactly (row multiset equality)."""
