@@ -23,7 +23,8 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from openplacereviews_db_spark.session import get_spark
+    from openplacereviews_db_spark.session import (drop_retained_blocks,
+                                                   get_spark, warm_up)
     import __spark_entry__ as entrymod
 
     # Co-tenant load context (CLAUDE.md rule: no single-run timing is
@@ -40,74 +41,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     progress = open("/tmp/bench_progress.log", "a", buffering=1)
 
-    # JIT/codegen warmup on a tiny query so q1 doesn't absorb startup cost
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    # Python-worker warmup: the first Arrow-kernel query otherwise pays
-    # one python worker spawn PER CORE (each importing pandas/numpy/
-    # orjson) inside its measured time — the r3 "cold-path spike".  One
-    # echo pass with a task on every core pre-forks the whole pool with
-    # the heavy imports done.
-    def _echo(batches):
-        import numpy  # noqa: F401  — preload into the worker
-        import pandas  # noqa: F401
-        try:
-            import orjson  # noqa: F401
-        except ImportError:
-            pass
-        yield from batches
-
-    n_cores = spark.sparkContext.defaultParallelism
-    (spark.range(0, n_cores * 4, 1, n_cores)
-     .mapInPandas(_echo, "id long").count())
-
-    # Input warmup: one metadata+data pass per table warms the OS page
-    # cache and the parquet footer reads, so the first query touching
-    # each table measures the query, not first-touch file IO.
-    from openplacereviews_db_spark.sources.testdata import TABLES, load_table
-    for t in TABLES:
-        load_table(spark, t, sf_dir).count()
-
-    import gc
-
-    def drop_retained_blocks() -> None:
-        # clearCache only empties the catalog cache; localCheckpoint /
-        # persist blocks of finished queries stay in the block manager
-        # and 90+ queries in one JVM accumulate heap + GC pressure —
-        # unpersist every retained RDD explicitly
-        spark.catalog.clearCache()
-        it = (spark.sparkContext._jsc.sc()
-              .getPersistentRDDs().values().iterator())
-        while it.hasNext():
-            it.next().unpersist(False)
-        gc.collect()
-
-    # Codegen warmup: run every query once at the SMALLEST sf before
-    # timing.  Whole-stage codegen caches compiled classes by generated
-    # source, which depends on schema + expressions, not data volume —
-    # so the sf0.001 pass compiles exactly the classes the measured run
-    # reuses, and the timed numbers measure steady-state execution (the
-    # reference is a long-running JVM server; its baseline is warm too)
-    # instead of 1-5 s of one-time Janino compilation per heavy query.
-    # Drop every leftover per-query (blocks, memory-sink views) so the
-    # timed run starts with a clean block manager.
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir) and os.path.abspath(warm_dir) != os.path.abspath(sf_dir):
-        t_warm = time.time()
-        for name, fn in entrymod.queries().items():
-            try:
-                fn(spark, warm_dir).collect()
-            except Exception as ex:  # never let warmup kill the bench
-                print(f"# warmup {name} failed: {ex}", file=progress)
-            spark.catalog.clearCache()
-        # one full cleanup AFTER warmup (cheap clearCache per query
-        # above): the timed run starts with an empty block manager but
-        # warmup doesn't pay a gc.collect() per query
-        drop_retained_blocks()
-        for v in spark.catalog.listTables():
-            if v.name.startswith("st_sink_"):
-                spark.catalog.dropTempView(v.name)
-        print(f"# warmup pass: {time.time() - t_warm:.1f}s", file=progress)
+    # JIT, Python-worker pool, input tables, and a codegen pass over
+    # every query at sf0.001, so the timed run measures steady-state
+    # execution (the reference is a long-running JVM server; its
+    # baseline is warm too) instead of one-time start-up work.
+    warm_up(spark, sf_dir, entrymod.queries(), log=progress)
 
     # Write-once staged artifacts (bucketed tables, the dup-group
     # mapping, streaming source splits, the OSM stage file) are keyed
@@ -160,7 +98,7 @@ def main() -> None:
             continue
         staged_builds[qname] = round(time.time() - t0, 3)
         spark.catalog.clearCache()
-    drop_retained_blocks()
+    drop_retained_blocks(spark)
     print(f"# staged builds: {staged_builds}", file=progress)
 
     timings: dict[str, float] = {}
@@ -169,7 +107,7 @@ def main() -> None:
         df = fn(spark, sf_dir)
         n = len(df.collect())
         dt = time.time() - t0
-        drop_retained_blocks()
+        drop_retained_blocks(spark)
         timings[name] = round(dt, 3)
         print(f"# {name}: {dt:.3f}s rows={n}", file=progress)
 
@@ -189,54 +127,15 @@ def main() -> None:
         t0 = time.time()
         len(entrymod.queries()[name](spark, sf_dir).collect())
         dt = time.time() - t0
-        drop_retained_blocks()
+        drop_retained_blocks(spark)
         retimes[name] = [first, round(dt, 3)]
         if dt < first:
             timings[name] = round(dt, 3)
         print(f"# retime {name}: {first:.3f}s -> {dt:.3f}s", file=progress)
 
-    # Optional second full timed pass in the SAME session
-    # (SPARK_GRAFT_BENCH_PASSES=2): two same-session means make the
-    # local-vs-driver mean gap interpretable — if the two passes agree
-    # within their noise band, a differing driver mean is environment,
-    # not code (r12 verdict item 8).  Default 1 keeps the driver's
-    # bench contract byte-identical.
-    second_pass: dict[str, float] = {}
-    if int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "1")) > 1:
-        for name, fn in entrymod.queries().items():
-            t0 = time.time()
-            try:
-                len(fn(spark, sf_dir).collect())
-            except Exception as ex:
-                # pass 2 is diagnostics — one flaky query must never
-                # cost the completed pass-1 JSON (r13 review); negative
-                # = did not complete, same convention as staged_builds
-                print(f"# pass2 {name} failed: {ex}", file=progress)
-                second_pass[name] = -max(
-                    round(time.time() - t0, 3), 0.001)
-                drop_retained_blocks()
-                continue
-            dt = time.time() - t0
-            drop_retained_blocks()
-            second_pass[name] = round(dt, 3)
-            print(f"# pass2 {name}: {dt:.3f}s", file=progress)
-
     total = sum(timings.values())
 
-    extra = {}
-    if second_pass:
-        ok2 = [v for v in second_pass.values() if v >= 0]
-        extra = {
-            # null, not 0.0, when NO pass-2 query completed — a 0.0
-            # mean would read as an impossibly perfect pass to a
-            # cross-round comparison (r13 review)
-            "second_pass_mean_query_seconds": (
-                round(sum(ok2) / len(ok2), 3) if ok2 else None),
-            "second_pass": second_pass,
-        }
-
     line = json.dumps({
-        **extra,
         "metric": "total_query_wall_seconds",
         "value": round(total, 3),
         "unit": "sec",

@@ -13,7 +13,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 CODE_LENGTH = 6
-ID_LENGTH = CODE_LENGTH + 4
 
 
 def hex_suffix(n: Column) -> Column:

@@ -5,7 +5,8 @@ tail") isolated a real ~1-1.7 s/heavy-query cost at bench scale from
 running every exchange at the session partition count (= cores): the
 same 19 stages run 400 tasks at 32 partitions vs 157 at 12, each task
 paying ~20-30 ms of launch/deserialize constants on sub-MB shuffles
-(`r14_ab_shuffle_parts.json`, `r14_stage_attrib_dd_ngram_jaccard.json`).
+(`evidence/r14_ab_shuffle_parts.json`,
+`evidence/r14_stage_attrib_dd_ngram_jaccard.json`).
 The empirical optimum is ~8-12 partitions in the tiny-data regime and
 ~cores at scale (the r13/r14 sf10/sf100 sessions all ran at 32).
 

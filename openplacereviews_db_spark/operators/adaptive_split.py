@@ -79,8 +79,8 @@ def adaptive_split_cells(pts: DataFrame, lat_col: str = "lat",
     # plan; everything downstream is a bounded cell-count table
     # (<= occupied finest cells), so materialize the one heavy pass
     # once and let every duplicate subtree scan the checkpoint
-    # (r14 interleaved A/B at sf0.1: 2.8-5.4 -> 2.3-2.9 s e2e,
-    # values identical; scripts/r14_ab_s4.py).
+    # (interleaved A/B at sf0.1: 2.8-5.4 -> 2.3-2.9 s end to end,
+    # values identical).
     finest = finest.localCheckpoint(eager=True)
 
     # per-level counts roll up from the single finest aggregation:

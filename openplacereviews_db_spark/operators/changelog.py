@@ -292,9 +292,6 @@ ACTION_CREATE = "create"
 ACTION_EDIT = "edit"
 ACTION_DELETE = "delete"
 
-#: canonical operations schema (see SURVEY.md §1.6)
-OPS_COLUMNS = ("obj_id", "block_id", "op_seq", "action", "doc", "change")
-
 
 def apply_operations(docs: DataFrame, ops: DataFrame,
                      id_col: str = "obj_id", doc_col: str = "doc") -> DataFrame:

@@ -87,25 +87,16 @@ def _symmetrize(df: DataFrame) -> DataFrame:
 
 
 def connected_components(edges: DataFrame, src: str = "id_a",
-                         dst: str = "id_b", max_iter: int = 20,
-                         round_log: list | None = None) -> DataFrame:
+                         dst: str = "id_b", max_iter: int = 20) -> DataFrame:
     """(node, component) for every node in the edge list; component =
-    min node id of its connected component.
-
-    ``round_log`` (optional): a list the loop appends one dict per
-    contraction round to — {"round", "viol", "wall_s"} — so at-scale
-    sessions can attribute wall time to round depth vs per-round cost
-    (the mm_phash_groups sf100 question, r13 verdict item 3) without
-    changing the plan."""
-    import time as _time
+    min node id of its connected component."""
     # materialize the (possibly expensive) pair pipeline once — the
     # symmetrize-union references it twice
     edges = edges.localCheckpoint()
     sym = _symmetrize(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
     labels = None
-    for _round in range(max_iter):
-        _t0 = _time.time()
+    for _ in range(max_iter):
         star = _contract_star_edges(sym).localCheckpoint()
         # m derives from the CHECKPOINTED star, so its lineage is one
         # aggregate deep — no checkpoint of its own (saves one job per
@@ -127,9 +118,6 @@ def connected_components(edges: DataFrame, src: str = "id_a",
                         | F.col("rcomp").isNull()).cast("int")))
             .collect()[0][0] or 0)
         labels = m.select(F.col("a").alias("node"), "comp")
-        if round_log is not None:
-            round_log.append({"round": _round, "viol": int(viol),
-                              "wall_s": round(_time.time() - _t0, 1)})
         if viol == 0:
             break
         sym = _symmetrize(star)
@@ -137,12 +125,11 @@ def connected_components(edges: DataFrame, src: str = "id_a",
 
 
 def dedup_groups(pairs: DataFrame, src: str = "id_a", dst: str = "id_b",
-                 max_iter: int = 20,
-                 round_log: list | None = None) -> DataFrame:
+                 max_iter: int = 20) -> DataFrame:
     """Duplicate groups from near-dup pairs: (node, canonical_id,
     group_size); canonical = min id of the component (the row a
     keep-one-per-group pipeline retains)."""
-    comp = connected_components(pairs, src, dst, max_iter, round_log)
+    comp = connected_components(pairs, src, dst, max_iter)
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("group_size"))
     return (comp.join(sizes, on="comp")
             .select("node", F.col("comp").alias("canonical_id"),

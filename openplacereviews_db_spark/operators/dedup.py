@@ -789,9 +789,9 @@ def simhash_table(df: DataFrame, text_col: str = "text",
     # (one parse per projection), not per-op Column calls: the Column
     # form paid ~2 s of py4j round-trips + eager re-analysis per
     # construction — the dominant cost of the whole query at bench
-    # scale (r14 phase probe: build 5.1 s vs 1.2 s execution;
-    # scripts/r14_ab_simhash_build.py pins the expression-string form
-    # at 0.35-0.38 s build with row-identical output).
+    # scale (build 5.1 s vs 1.2 s execution, evidence/r14_phase1.json;
+    # the expression-string form builds in 0.35-0.38 s with
+    # row-identical output).
     words = words.selectExpr(
         "id", *[f"(instr('0123456789abcdef', substring(h, {n + 1}, 1)) - 1)"
                 f" AS nib{n}" for n in range(bits // 4)])

@@ -47,7 +47,7 @@ def global_cumsum(df: DataFrame, value_col: str, order_cols: list,
     # This makes construction of a total-order operator EAGER — the
     # plan-audit laziness test whitelists its two callers with that
     # justification.  Callers must free blocks via unpersisting
-    # retained RDDs (bench.py drop_retained_blocks), clearCache alone
+    # retained RDDs (session.drop_retained_blocks), clearCache alone
     # does not.
     df = df.localCheckpoint()
     ranged = df.repartitionByRange(n, *sort_exprs).withColumn(

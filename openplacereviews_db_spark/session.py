@@ -13,11 +13,10 @@ single JVM) but every setting is the one you would also want on a
 
 from __future__ import annotations
 
+import gc
 import os
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def driver_mem_for(sf_dir: str | None) -> str:
@@ -54,14 +53,24 @@ def get_spark(app_name: str = "openplacereviews-db-spark",
 
     ``sf_dir`` (optional) sizes the harness heap to the data decade —
     see :func:`driver_mem_for`.  Only effective before the JVM starts.
+    ``SPARK_GRAFT_CPUS`` (default 32) sets the local core count and the
+    default shuffle partition count; a value that is not a positive
+    integer raises.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    try:
+        cpus = int(env) if env else 32
+    except ValueError:
+        cpus = 0
+    if cpus <= 0:
+        raise ValueError("SPARK_GRAFT_CPUS must be a positive integer "
+                         f"core count, got {env!r}")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions",
-                str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+                str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -78,13 +87,10 @@ def get_spark(app_name: str = "openplacereviews-db-spark",
                 os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", driver_mem_for(sf_dir))
-        # default off (a 200-query bench session pays UI bookkeeping for
-        # nothing); SPARK_GRAFT_UI=1 turns it on for the measurement
-        # probes that read per-stage shuffle metrics over the REST API
-        # (scripts/shuffle_probe.py)
-        .config("spark.ui.enabled",
-                "true" if os.environ.get("SPARK_GRAFT_UI", "0").lower()
-                not in ("", "0", "false") else "false")
+        # off: a 200-query bench session would pay UI bookkeeping for
+        # nothing.  Per-stage metrics stay readable from the status
+        # store by job group (scripts/ab.py).
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # Generated plans here can be enormous (closed-form OLC / name
         # cascade expression trees); retained-execution metadata and
@@ -114,6 +120,100 @@ def get_spark(app_name: str = "openplacereviews-db-spark",
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def drop_retained_blocks(spark: SparkSession) -> None:
+    """Drop every cached and persisted block of finished queries.
+
+    ``clearCache`` only empties the catalog cache; localCheckpoint and
+    persist blocks stay in the block manager, and 90+ queries in one JVM
+    accumulate heap and GC pressure, so every retained RDD is
+    unpersisted explicitly, and a Python GC lets the Py4J proxies of
+    the dropped plans go too."""
+    spark.catalog.clearCache()
+    it = (spark.sparkContext._jsc.sc()
+          .getPersistentRDDs().values().iterator())
+    while it.hasNext():
+        it.next().unpersist(False)
+    gc.collect()
+
+
+def drop_sink_views(spark: SparkSession) -> None:
+    """Drop the ``st_sink_*`` temp views that streaming memory sinks
+    register, so their rows do not outlive the query."""
+    for v in spark.catalog.listTables():
+        if v.name.startswith("st_sink_"):
+            spark.catalog.dropTempView(v.name)
+
+
+#: The smallest generated sf, where :func:`warm_up` runs its codegen pass.
+WARMUP_SF_DIR = "/root/testdata/sf0.001"
+
+
+def warm_up(spark: SparkSession, sf_dir: str, queries: dict,
+            log=None) -> None:
+    """Warm a fresh session so single-run timings measure the query.
+
+    Cold, a single run reads 2-7x slow.  In order:
+
+    - a tiny aggregation JIT-compiles the common codegen path;
+    - a ``mapInPandas`` echo with a task on every core pre-forks the
+      Python worker pool with numpy, pandas and orjson imported (else
+      the first Arrow-kernel query pays one worker spawn per core);
+    - one count per input table warms the page cache and the parquet
+      footers;
+    - every entry of ``queries`` (name -> ``fn(spark, sf_dir)``) runs
+      once at ``WARMUP_SF_DIR``, the smallest sf.  Whole-stage codegen
+      caches compiled classes by generated source, which depends on
+      schema and expressions, not data volume, so this compiles the
+      classes the timed run reuses.  Skipped, with a line to ``log``,
+      when ``WARMUP_SF_DIR`` is missing or is ``sf_dir`` itself.  A
+      failing query is reported to ``log`` (a text file) and skipped.
+
+    Ends with an empty block manager and no memory-sink views.
+    """
+    import time
+
+    from openplacereviews_db_spark.sources.testdata import TABLES, load_table
+
+    spark.range(1000).selectExpr("sum(id)").collect()
+
+    def _echo(batches):
+        import numpy  # noqa: F401  — preload into the worker
+        import pandas  # noqa: F401
+        try:
+            import orjson  # noqa: F401
+        except ImportError:
+            pass
+        yield from batches
+
+    n_cores = spark.sparkContext.defaultParallelism
+    (spark.range(0, n_cores * 4, 1, n_cores)
+     .mapInPandas(_echo, "id long").count())
+    for t in TABLES:
+        load_table(spark, t, sf_dir).count()
+    warm_dir = WARMUP_SF_DIR
+    if not os.path.isdir(warm_dir):
+        if log is not None:
+            print(f"# warmup pass skipped: {warm_dir} missing", file=log)
+    elif os.path.abspath(warm_dir) == os.path.abspath(sf_dir):
+        if log is not None:
+            print(f"# warmup pass skipped: {warm_dir} is the run's sf",
+                  file=log)
+    else:
+        t0 = time.time()
+        for name, fn in queries.items():
+            try:
+                fn(spark, warm_dir).collect()
+            except Exception as ex:  # never let warm-up kill a run
+                if log is not None:
+                    print(f"# warmup {name} failed: {ex}", file=log)
+            # cheap per query; the full drop (with its GC) runs once below
+            spark.catalog.clearCache()
+        if log is not None:
+            print(f"# warmup pass: {time.time() - t0:.1f}s", file=log)
+    drop_retained_blocks(spark)
+    drop_sink_views(spark)
 
 
 def blockmgr_bytes(spark: SparkSession) -> int:
@@ -153,15 +253,10 @@ def release_shuffles(spark: SparkSession, settle_s: float = 20.0,
     it explicitly between queries instead of relying on driver heap
     pressure to GC for us.
     """
-    import gc
     import math
     import time
 
-    spark.catalog.clearCache()
-    it = (spark.sparkContext._jsc.sc()
-          .getPersistentRDDs().values().iterator())
-    while it.hasNext():
-        it.next().unpersist(False)
+    drop_retained_blocks(spark)
     before = blockmgr_bytes(spark)
     # two GC rounds minimum: the first collects the Py4J proxies and
     # enqueues the JVM weak refs, the second lets the cleaner thread's

@@ -233,8 +233,7 @@ EAGER_BUILD_OK = {"dd_dup_groups",  # live CC loop (the contraction demo)
                   "s4_adaptive_split"}
                   # ^ checkpoints the finest cell-count aggregation
                   # once: the frontier walk nests it up to 2^6 times
-                  # (r14: 2.8-5.4 -> 2.3-2.9 s e2e at sf0.1,
-                  # scripts/r14_ab_s4.py)
+                  # (2.8-5.4 -> 2.3-2.9 s end to end at sf0.1)
 
 
 def test_plan_build_runs_no_computation_jobs(spark, sf_dir):

@@ -67,3 +67,24 @@ def test_call_site_capture_is_off(spark):
     build's py4j commands (session.py)."""
     assert spark.conf.get(
         "spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_bad_cpus_names_the_variable(monkeypatch):
+    """SPARK_GRAFT_CPUS is read once, in get_spark, before any session
+    is built: a value that is not a positive integer fails there, by
+    name, instead of at import or as local[0]."""
+    import pytest
+
+    from openplacereviews_db_spark.session import get_spark
+
+    for bad in ("abc", "0", "-2", "2.5"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            get_spark("bad-cpus")
+
+
+def test_cpus_sets_the_master(spark):
+    """The session fixture passes shuffle_partitions=8 explicitly; its
+    core count still comes from SPARK_GRAFT_CPUS (default 32)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "32"
+    assert spark.sparkContext.master == f"local[{cpus}]"
