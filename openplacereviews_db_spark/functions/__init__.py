@@ -1,3 +1,4 @@
 """Scalar function kits: geo (haversine/OLC/tiles), geometry
-(mercator, polygons, Douglas-Peucker), text (name-match cascade +
-SQL mirrors), hashing (shingles, minhash, simhash, fingerprints)."""
+(mercator, polygons, Douglas-Peucker), text (name-match cascade),
+hashing (shingles, minhash, simhash, fingerprints), ids — the
+cross-engine helpers written once over the SQL ``dialect``."""

@@ -1,13 +1,15 @@
 """Geo scalar functions.
 
-Column-expression implementations (JVM-side, whole-stage-codegen friendly)
-of the reference's geo math:
+JVM-side, whole-stage-codegen-friendly expressions of the reference's
+geo math.  The cross-engine helpers take a :mod:`.dialect` first and
+return SQL text, one definition for the Spark plans and the DuckDB
+oracles:
 
 - ``haversine_m``  — distance in meters, exact constants of the reference
   (``OsmMapUtils.java:96-110``: R = 6372.8 km, simplified asin form).
 - ``olc_encode`` / ``olc_decode_center`` — OpenLocationCode 6-char tile
   codec (``OsmLocationTool.java:26-55``).  OLC is an alphabet-remapped
-  base-20 positional code, so it is expressible with pure column
+  base-20 positional code, so it is expressible with pure SQL
   arithmetic — no Python UDF in the hot path.
 - ``grid_tile`` — a simple fixed-degree grid cell id (SQL-expressible on
   any engine; used where oracle parity matters more than OLC formatting).
@@ -21,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .dialect import Dialect
+
 #: reference: OsmMapUtils.java:100 — "for haversine use R = 6372.8 km"
 HAVERSINE_R_KM = 6372.8
 
@@ -29,30 +33,19 @@ OLC_ALPHABET = "23456789CFGHJMPQRVWX"
 OLC_BASE = 20
 
 
-def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
+def haversine_m(d: Dialect, lat1: str, lon1: str, lat2: str,
+                lon2: str) -> str:
     """Distance in meters; constants match OsmMapUtils.getDistance exactly."""
-    dlat = F.radians(lat2 - lat1)
-    dlon = F.radians(lon2 - lon1)
-    a = (
-        F.sin(dlat / 2) * F.sin(dlat / 2)
-        + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2))
-        * F.sin(dlon / 2) * F.sin(dlon / 2)
-    )
-    return 2 * HAVERSINE_R_KM * 1000 * F.asin(F.sqrt(a))
-
-
-def haversine_m_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
-    """The same formula as ANSI SQL text (for DuckDB oracles)."""
-    dlat = f"radians({lat2} - {lat1})"
-    dlon = f"radians({lon2} - {lon1})"
-    a = (f"(sin({dlat}/2) * sin({dlat}/2) + "
+    dlat = f"radians(({lat2}) - ({lat1}))"
+    dlon = f"radians(({lon2}) - ({lon1}))"
+    a = (f"(sin({dlat} / 2) * sin({dlat} / 2) + "
          f"cos(radians({lat1})) * cos(radians({lat2})) * "
-         f"sin({dlon}/2) * sin({dlon}/2))")
-    return f"(2 * {HAVERSINE_R_KM} * 1000 * asin(sqrt({a})))"
+         f"sin({dlon} / 2) * sin({dlon} / 2))")
+    return f"(asin(sqrt({a})) * {d.dbl(2 * HAVERSINE_R_KM * 1000)})"
 
 
 # ---------------------------------------------------------------------------
-# OpenLocationCode — pure Python (driver-side) and column-expression variants
+# OpenLocationCode — pure Python (driver-side reference) and SQL
 # ---------------------------------------------------------------------------
 
 def olc_encode_py(lat: float, lon: float, code_length: int = 6) -> str:
@@ -75,11 +68,11 @@ def olc_encode_py(lat: float, lon: float, code_length: int = 6) -> str:
     lon_v = lon + 180.0
     # Closed-form digit extraction: digit at resolution r is
     # floor(v / r) % 20.  The same IEEE-double expression is used by the
-    # column and SQL variants below so all three agree bit-for-bit.
+    # SQL helper below so both agree bit-for-bit.
     # NB: floor(v / r), not v // r — float floor-division is fmod-based
     # and disagrees with floor-of-quotient in edge cases (90.0 // 0.05 ==
-    # 1799 but floor(90.0 / 0.05) == 1800); SQL/column engines compute
-    # the latter.
+    # 1799 but floor(90.0 / 0.05) == 1800); SQL engines compute the
+    # latter.
     import math
 
     code = []
@@ -110,86 +103,45 @@ def olc_decode_center_py(code: str) -> tuple[float, float]:
     return lat_lo + lat_res / 2, lon_lo + lon_res / 2
 
 
-def olc_encode(lat: Column, lon: Column, code_length: int = 6) -> Column:
-    """OLC encode as a pure column expression (no UDF).
+def olc_encode(d: Dialect, lat: str, lon: str, code_length: int = 6) -> str:
+    """OLC encode as one SQL expression (no UDF).
 
-    Each digit pair is floor-division arithmetic + alphabet lookup via
-    ``substring`` on a literal — stays inside whole-stage codegen.
+    Each digit is floor-division arithmetic + alphabet lookup via
+    ``substr`` on a literal — stays inside whole-stage codegen, and
+    matches :func:`olc_encode_py` digit-for-digit (same IEEE-double ops).
     """
     if code_length % 2 != 0 or code_length > 10:
         raise ValueError("code_length must be even and <= 10")
-    lat_c = F.least(F.lit(90.0 - 1e-10), F.greatest(F.lit(-90.0), lat)) + F.lit(90.0)
-    lon_c = ((lon + F.lit(180.0)) % 360.0 + 360.0) % 360.0
-    parts: list[Column] = []
-    lat_res, lon_res = 20.0, 20.0
-    alpha = F.lit(OLC_ALPHABET)
-    for _ in range(code_length // 2):
-        d_lat = (F.floor(lat_c / F.lit(lat_res)) % OLC_BASE).cast("int")
-        d_lon = (F.floor(lon_c / F.lit(lon_res)) % OLC_BASE).cast("int")
-        parts.append(alpha.substr(d_lat + 1, F.lit(1)))
-        parts.append(alpha.substr(d_lon + 1, F.lit(1)))
-        lat_res /= OLC_BASE
-        lon_res /= OLC_BASE
-    return F.concat(*parts)
-
-
-def olc_encode_sql(lat: str, lon: str, code_length: int = 6) -> str:
-    """The same closed-form OLC encode as ANSI/DuckDB SQL text.
-
-    Mirrors :func:`olc_encode` digit-for-digit (same IEEE-double ops) so
-    a DuckDB oracle computes identical codes.
-    """
-    lat_c = f"(least(90.0 - 1e-10, greatest(-90.0, {lat})) + 90.0)"
-    lon_c = f"(((({lon}) + 180.0) % 360.0 + 360.0) % 360.0)"
+    lat_c = (f"(least({d.dbl(90.0 - 1e-10)}, greatest({d.dbl(-90.0)}, "
+             f"{lat})) + {d.dbl(90.0)})")
+    turn = d.dbl(360.0)
+    lon_c = f"(((({lon}) + {d.dbl(180.0)}) % {turn} + {turn}) % {turn})"
     parts: list[str] = []
     lat_res, lon_res = 20.0, 20.0
     for _ in range(code_length // 2):
         for v, res in ((lat_c, lat_res), (lon_c, lon_res)):
-            d = (f"(CAST(floor({v} / CAST({res!r} AS DOUBLE)) AS BIGINT)"
-                 f" % {OLC_BASE})")
-            parts.append(f"substr('{OLC_ALPHABET}', CAST({d} AS INTEGER) + 1, 1)")
+            digit = (f"CAST((CAST(floor({v} / {d.dbl(res)}) AS BIGINT) "
+                     f"% {OLC_BASE}) AS INT)")
+            parts.append(f"substr('{OLC_ALPHABET}', ({digit} + 1), 1)")
         lat_res /= OLC_BASE
         lon_res /= OLC_BASE
     return "(" + " || ".join(parts) + ")"
 
 
-def olc_decode_center_sql(code: str, code_length: int = 6) -> tuple[str, str]:
-    """(center_lat, center_lon) SQL text for a truncated OLC code column."""
-    def dbl(x: float) -> str:
-        # plain decimal literals become DECIMAL in DuckDB; force doubles
-        return f"CAST({x!r} AS DOUBLE)"
+def olc_decode_center(d: Dialect, code: str,
+                      code_length: int = 6) -> tuple[str, str]:
+    """(center_lat, center_lon) of a truncated OLC code: latitude
+    digits sit at odd positions, longitude digits at even ones."""
+    def axis(lo: float, first: int) -> str:
+        v, res = d.dbl(lo), 400.0
+        for k in range(first, code_length + 1, 2):
+            res /= OLC_BASE
+            digit = (f"(instr('{OLC_ALPHABET}', substr(upper({code}), "
+                     f"{k}, 1)) - 1)")
+            v = f"({v} + (CAST({digit} AS DOUBLE) * {d.dbl(res)}))"
+        return f"({v} + {d.dbl(res / 2)})"
 
-    lat_terms = [dbl(-90.0)]
-    lon_terms = [dbl(-180.0)]
-    lat_res, lon_res = 400.0, 400.0
-    for i in range(0, code_length, 2):
-        lat_res /= OLC_BASE
-        lon_res /= OLC_BASE
-        lat_terms.append(
-            f"(strpos('{OLC_ALPHABET}', substr(upper({code}), {i + 1}, 1)) - 1)"
-            f" * {dbl(lat_res)}")
-        lon_terms.append(
-            f"(strpos('{OLC_ALPHABET}', substr(upper({code}), {i + 2}, 1)) - 1)"
-            f" * {dbl(lon_res)}")
-    lat_sql = "(" + " + ".join(lat_terms) + f" + {dbl(lat_res / 2)})"
-    lon_sql = "(" + " + ".join(lon_terms) + f" + {dbl(lon_res / 2)})"
-    return lat_sql, lon_sql
-
-
-def olc_decode_center(code: Column, code_length: int = 6) -> tuple[Column, Column]:
-    """(center_lat, center_lon) of a truncated OLC code, column expressions."""
-    lat = F.lit(-90.0)
-    lon = F.lit(-180.0)
-    alpha = F.lit(OLC_ALPHABET)
-    lat_res, lon_res = 400.0, 400.0
-    for i in range(0, code_length, 2):
-        lat_res /= OLC_BASE
-        lon_res /= OLC_BASE
-        d_lat = F.instr(alpha, F.upper(code).substr(i + 1, 1)) - 1
-        d_lon = F.instr(alpha, F.upper(code).substr(i + 2, 1)) - 1
-        lat = lat + d_lat.cast("double") * F.lit(lat_res)
-        lon = lon + d_lon.cast("double") * F.lit(lon_res)
-    return lat + F.lit(lat_res / 2), lon + F.lit(lon_res / 2)
+    return axis(-90.0, 1), axis(-180.0, 2)
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,10 @@
 """Geometry kit (SURVEY.md §2.9, OsmMapUtils.java re-expressed).
 
-Column expressions for the pure-arithmetic parts (mercator tiles,
-normalization, orthogonal distance) and Python kernels + vectorized
-wrappers for the array-valued parts (ray casting, Douglas-Peucker,
-shoelace area, clockwise test, centroids).  All formulas are the
+Expressions for the pure-arithmetic parts (mercator tiles, Z-order
+keys as SQL helpers that take a :mod:`.dialect` first; orthogonal
+distance as a Column) and Python kernels + vectorized wrappers for the
+array-valued parts (ray casting, Douglas-Peucker, shoelace area,
+clockwise test, centroids).  All formulas are the
 standard public ones (slippy-map tiling, shoelace, Peucker) with
 behavior matched to the reference's intent — citations note the
 corresponding OsmMapUtils methods, not copied code.
@@ -21,57 +22,51 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dialect import Dialect
+
 COORDS_DDL = "array<struct<lat:double,lon:double>>"
 
 
 # ---------------------------------------------------------------------------
-# column expressions (JVM-side)
+# expressions (JVM-side)
 # ---------------------------------------------------------------------------
 
-def mercator_tile_x(lon: Column, zoom: int) -> Column:
+def mercator_tile_x(d: Dialect, lon: str, zoom: int) -> str:
     """Slippy-map tile x at integer zoom (OsmMapUtils.getTileNumberX
     analog)."""
-    return F.floor((lon + 180.0) / 360.0 * (1 << zoom)).cast("long")
+    return (f"CAST(floor(((({lon}) + {d.dbl(180.0)}) / {d.dbl(360.0)}) "
+            f"* {1 << zoom}) AS BIGINT)")
 
 
-def mercator_tile_y(lat: Column, zoom: int) -> Column:
+def mercator_tile_y(d: Dialect, lat: str, zoom: int) -> str:
     """Slippy-map tile y (OsmMapUtils.getTileNumberY analog); latitude
     clamped to the Web-Mercator domain."""
-    lat_c = F.least(F.lit(85.0511287798), F.greatest(F.lit(-85.0511287798), lat))
-    rad = F.radians(lat_c)
-    n = (1.0 - F.log(F.tan(rad) + 1.0 / F.cos(rad)) / math.pi) / 2.0
-    return F.floor(n * (1 << zoom)).cast("long")
+    rad = (f"radians(least({d.dbl(85.0511287798)}, "
+           f"greatest({d.dbl(-85.0511287798)}, {lat})))")
+    n = (f"(({d.dbl(1.0)} - (ln((tan({rad}) + ({d.dbl(1.0)} / cos({rad})))) "
+         f"/ {d.dbl(math.pi)})) / {d.dbl(2.0)})")
+    return f"CAST(floor(({n} * {1 << zoom})) AS BIGINT)"
 
 
-def mercator_tile_x_sql(lon: str, zoom: int) -> str:
-    return (f"CAST(floor((({lon}) + CAST(180.0 AS DOUBLE)) / "
-            f"CAST(360.0 AS DOUBLE) * {1 << zoom}) AS BIGINT)")
+def _zorder_quantize(d: Dialect, v: str, lo: float, span: float,
+                     bits: int) -> str:
+    cells = 1 << bits
+    q = (f"CAST(floor(((({v}) + {d.dbl(lo)}) * {d.dbl(float(cells))}) "
+         f"/ {d.dbl(span)}) AS BIGINT)")
+    return f"least({cells - 1}, greatest(0, {q}))"
 
 
-def mercator_tile_y_sql(lat: str, zoom: int) -> str:
-    lat_c = (f"least(CAST(85.0511287798 AS DOUBLE), "
-             f"greatest(CAST(-85.0511287798 AS DOUBLE), ({lat})))")
-    rad = f"radians({lat_c})"
-    n = (f"((CAST(1.0 AS DOUBLE) - ln(tan({rad}) + CAST(1.0 AS DOUBLE)"
-         f" / cos({rad})) / pi()) / CAST(2.0 AS DOUBLE))")
-    return f"CAST(floor({n} * {1 << zoom}) AS BIGINT)"
-
-
-def zorder_quantize_lon(lon: Column, bits: int = 16) -> Column:
+def zorder_quantize_lon(d: Dialect, lon: str, bits: int = 16) -> str:
     """Quantize longitude to the ``2^bits`` Z-order grid (clamped)."""
-    cells = 1 << bits
-    q = F.floor((lon + 180.0) * float(cells) / 360.0).cast("long")
-    return F.least(F.lit(cells - 1), F.greatest(F.lit(0), q))
+    return _zorder_quantize(d, lon, 180.0, 360.0, bits)
 
 
-def zorder_quantize_lat(lat: Column, bits: int = 16) -> Column:
+def zorder_quantize_lat(d: Dialect, lat: str, bits: int = 16) -> str:
     """Quantize latitude to the ``2^bits`` Z-order grid (clamped)."""
-    cells = 1 << bits
-    q = F.floor((lat + 90.0) * float(cells) / 180.0).cast("long")
-    return F.least(F.lit(cells - 1), F.greatest(F.lit(0), q))
+    return _zorder_quantize(d, lat, 90.0, 180.0, bits)
 
 
-def zorder_interleave(qx: Column, qy: Column, bits: int = 16) -> Column:
+def zorder_interleave(d: Dialect, qx: str, qy: str, bits: int = 16) -> str:
     """Morton (Z-order) value from pre-quantized cell coords: bit i of
     qx lands at position 2i, bit i of qy at 2i+1 — a ``2*bits``-bit key
     whose prefix ordering is a recursive spatial quadtree.
@@ -80,43 +75,15 @@ def zorder_interleave(qx: Column, qy: Column, bits: int = 16) -> Column:
     clusters spatial neighbors into the same files, so a bbox query
     becomes a handful of Z-ranges and parquet min/max stats skip
     everything else — the data-skipping layout trick behind
-    Delta/Iceberg OPTIMIZE ZORDER, here as a plain column expression.
-    Feed it quantized COLUMNS (not inlined expressions): the interleave
-    references its inputs ``2*bits`` times.
+    Delta/Iceberg OPTIMIZE ZORDER, here as a plain expression.
+    Pass quantized COLUMN NAMES (not inlined expressions): the
+    interleave references its inputs ``2*bits`` times.  Bit positions
+    are disjoint, so ``+`` is ``|``.
     """
-    parts = []
-    for i in range(bits):
-        parts.append(F.shiftleft(
-            F.shiftright(qx, i).bitwiseAND(F.lit(1)), 2 * i))
-        parts.append(F.shiftleft(
-            F.shiftright(qy, i).bitwiseAND(F.lit(1)), 2 * i + 1))
-    acc = parts[0]
-    for p in parts[1:]:
-        acc = acc + p  # bit positions are disjoint, + == |
-    return acc
-
-
-def zorder_quantize_lon_sql(lon: str, bits: int = 16) -> str:
-    cells = 1 << bits
-    return (f"least({cells - 1}, greatest(0, CAST(floor((({lon}) + "
-            f"CAST(180.0 AS DOUBLE)) * CAST({cells}.0 AS DOUBLE) / "
-            f"CAST(360.0 AS DOUBLE)) AS BIGINT)))")
-
-
-def zorder_quantize_lat_sql(lat: str, bits: int = 16) -> str:
-    cells = 1 << bits
-    return (f"least({cells - 1}, greatest(0, CAST(floor((({lat}) + "
-            f"CAST(90.0 AS DOUBLE)) * CAST({cells}.0 AS DOUBLE) / "
-            f"CAST(180.0 AS DOUBLE)) AS BIGINT)))")
-
-
-def zorder_interleave_sql(qx: str, qy: str, bits: int = 16) -> str:
-    """DuckDB mirror of :func:`zorder_interleave` — pass COLUMN NAMES
-    from a CTE, the inputs are referenced ``2*bits`` times."""
     terms = []
     for i in range(bits):
-        terms.append(f"((({qx} >> {i}) & 1) << {2 * i})")
-        terms.append(f"((({qy} >> {i}) & 1) << {2 * i + 1})")
+        for q, pos in ((qx, 2 * i), (qy, 2 * i + 1)):
+            terms.append(d.shift_left(f"({d.shift_right(q, i)} & 1)", pos))
     return "(" + " + ".join(terms) + ")"
 
 
@@ -340,7 +307,7 @@ def simplify_ways(df: DataFrame, epsilon_deg: float,
     from the kernel OUTPUT — column pruning cannot reach inside a
     mapInPandas function, so a counts-only consumer would otherwise
     pay the per-point dict build + Arrow serialization of every
-    simplified way for columns it discards (r14, g4)."""
+    simplified way for columns it discards (g4 is such a consumer)."""
     import pandas as pd
 
     out_coords = f"coords {COORDS_DDL}, " if with_coords else ""
@@ -372,9 +339,9 @@ def way_stats(df: DataFrame, coords_col: str = "coords",
     """(id, area_m2, clockwise, centroid_lat, centroid_lon, n_vertices)
     per way.  ``n_vertices`` (= size(coords), closing duplicate
     included) is emitted from the kernel so consumers never re-execute
-    the upstream ways build just to count vertices (r14: g5 referenced
-    its input twice — kernel + a size() side joined back — paying the
-    scan/groupBy twice plus a join)."""
+    the upstream ways build just to count vertices (a size() side
+    joined back would make g5 pay the scan/groupBy twice plus a
+    join)."""
     import pandas as pd
 
     schema = (f"{id_col} long, area_m2 double, clockwise boolean, "

@@ -28,13 +28,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import hashing as H
+from ..functions.dialect import SPARK
 
 
 def _word_types(docs: DataFrame) -> DataFrame:
     """(word, freq) over the normalized corpus — the only corpus-sized
     pass; everything downstream is vocabulary-sized."""
     return (docs.select(F.explode(F.filter(
-        F.split(H.norm_text(F.col("text")), " "),
+        F.split(F.expr(H.norm_text(SPARK, "text")), " "),
         lambda w: w != "")).alias("word"))
         .groupBy("word").agg(F.count(F.lit(1)).alias("freq")))
 
@@ -148,7 +149,7 @@ def encode_token_counts(docs: DataFrame, merges: list[tuple[str, str]],
                   - F.length(F.replace(enc, F.lit(S), F.lit(""))))
         return (F.shiftright(n_sent, 1) - F.lit(1)).cast("long")
 
-    words = F.filter(F.split(H.norm_text(F.col(text_col)), " "),
+    words = F.filter(F.split(F.expr(H.norm_text(SPARK, text_col)), " "),
                      lambda w: w != "")
     zero = F.lit(0).cast("long")
     return docs.select(

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions import geo
+from ..functions.dialect import SPARK
 from ..functions.geo import HAVERSINE_R_KM
 
 STATUS_DELETED = "deleted"
@@ -214,8 +216,6 @@ def invariant_report(g: DataFrame, dist_m: float = 150.0) -> DataFrame:
     seq, and members ≥ ``dist_m`` from their group seed.  A greedy-
     kernel regression flips a counter and fails the driver hash.
     """
-    from ..functions import geo
-
     # g is referenced THREE times below (members, seed, base) and is
     # the output of the greedy Python kernel: left lazy, the whole
     # repartition + mapInPandas subtree executed 3x per run (r14 noop
@@ -244,8 +244,8 @@ def invariant_report(g: DataFrame, dist_m: float = 150.0) -> DataFrame:
             F.max((F.col("seed_id") == F.col("group_id"))
                   & (F.col("seed_status") == deleted)).alias("seed_ok"),
             F.sum(F.when(
-                geo.haversine_m(F.col("slat"), F.col("slon"),
-                                F.col("lat"), F.col("lon")) >= dist_m, 1)
+                F.expr(geo.haversine_m(SPARK, "slat", "slon", "lat", "lon"))
+                >= dist_m, 1)
                 .when(F.col("seed_id").isNull(), 1).otherwise(0))
             .alias("far_members"),
         ))

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hashing as H
+from ..functions.dialect import SPARK
 
 #: 2^32 as a double — md5-prefix uniform in [0, 1)
 _U32 = 4294967296.0
@@ -106,7 +107,7 @@ def mixture_weights(df: DataFrame, domain_col: str, text_col: str,
     intentional and bounded).  Output per domain: n_docs, n_tokens,
     weight, expected_docs under a same-size resample.
     """
-    words = F.filter(F.split(H.norm_text(F.col(text_col)), " "),
+    words = F.filter(F.split(F.expr(H.norm_text(SPARK, text_col)), " "),
                      lambda w: w != "")
     per = (df.select(F.col(domain_col).alias("domain"),
                      F.size(words).alias("_t"))
@@ -138,7 +139,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
     combine — cardinality is bounded by corpus token count, the same
     scale as the shingle explode the dedup family already does.
     """
-    words = F.filter(F.split(H.norm_text(F.col(text_col)), " "),
+    words = F.filter(F.split(F.expr(H.norm_text(SPARK, text_col)), " "),
                      lambda w: w != "")
     base = df.select(F.col(id_col).alias("id"), words.alias("_w"))
     n_words = F.size(F.col("_w"))

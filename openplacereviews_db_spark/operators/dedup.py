@@ -23,11 +23,12 @@ whole-stage codegen) — see ``functions.hashing``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import hashing as H
+from ..functions.dialect import SPARK
 
 
 def exploded_shingles(df: DataFrame, text_col: str = "text",
@@ -58,18 +59,13 @@ def exploded_shingles(df: DataFrame, text_col: str = "text",
     # SQL expression strings, not nested Column calls — this builder
     # feeds every member of the shingle family (minhash_state / LSH /
     # ngram / containment) and its Column form cost ~400 py4j round
-    # trips per build (~5 ms RTT on this box, the r14 construction
-    # rule); the parsed trees are identical (expr<->Column unit in
-    # tests/test_similarity_lsh.py).  NOTE: Spark's regexp_replace is
-    # always-global with NO flag argument — only the DuckDB mirror
-    # (hashing.norm_text_sql) carries 'g'.
+    # trips per build (~5 ms per round trip here).
     extra = extra_cols or []
     ecols = "".join(f", `{c}`" for c in extra)
+    norm = H.norm_text(SPARK, f"`{text_col}`")
     words = df.selectExpr(
         f"`{id_col}` AS id", *[f"`{c}`" for c in extra],
-        f"posexplode(filter(split("
-        f"lower(trim(regexp_replace(`{text_col}`, '\\\\s+', ' '))), ' '),"
-        f" w -> w != '')) AS (pos, w)",
+        f"posexplode(filter(split({norm}, ' '), w -> w != '')) AS (pos, w)",
     )
     if parts:
         # pinned count replaces the window's ENSURE_REQUIREMENTS
@@ -109,7 +105,8 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
     first-wins dedup call sites, SURVEY.md §2.4 A7) and group size.
     """
     return (
-        df.select(F.col(id_col), H.fingerprint(F.col(text_col)).alias("fp"))
+        df.select(F.col(id_col),
+                  F.expr(H.fingerprint(SPARK, text_col)).alias("fp"))
         .groupBy("fp")
         .agg(
             F.min(id_col).alias("keep_id"),
@@ -118,21 +115,14 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
     )
 
 
-def sid16_set(sids: Column) -> Column:
-    """INT16 projection of an xxhash64 shingle-id set — the tier-1
-    verify payload (dd_containment pattern, r13).  Sign-extending
-    low-16 projection: shiftleft then ARITHMETIC shiftright keeps the
-    value in SMALLINT range (a bare ``& 0xFFFF`` overflows the ANSI
-    smallint cast); array_distinct dedups internal collisions so the
-    projected intersection stays a set intersection."""
-    return F.array_distinct(F.transform(
-        sids,
-        lambda x: F.shiftright(F.shiftleft(x, 48), 48).cast("smallint")))
-
-
 def sid16_set_sql(sids: str) -> str:
-    """SQL-string form of :func:`sid16_set` (one parse instead of a
-    py4j lambda build — the r14 construction rule)."""
+    """INT16 projection of an xxhash64 shingle-id set — the tier-1
+    verify payload (the dd_containment pattern), as one Spark SQL
+    expression.  Sign-extending low-16 projection: shiftleft then
+    ARITHMETIC shiftright keeps the value in SMALLINT range (a bare
+    ``& 0xFFFF`` overflows the ANSI smallint cast); array_distinct
+    dedups internal collisions so the projected intersection stays a
+    set intersection."""
     return (f"array_distinct(transform({sids}, "
             f"x -> CAST(shiftright(shiftleft(x, 48), 48) AS SMALLINT)))")
 
@@ -182,8 +172,8 @@ def tiered_jaccard_verify(cand: DataFrame, sets_a: DataFrame,
     partition-count and join-order invariant (inner equi-joins; the
     r15 A/B fingerprints both variants equal, and each caller's oracle
     re-proves it)."""
-    # SQL expression STRINGS throughout (the r14 construction rule —
-    # ~5 ms py4j RTT on this box makes wide Column chains build-bound);
+    # SQL expression STRINGS throughout (a ~5 ms py4j round trip per
+    # Column call makes wide Column chains build-bound);
     # parses to the identical expression trees the Column forms built.
     def proj16(sets: DataFrame, idc: str, sfx: str) -> DataFrame:
         return sets.select(F.col("id").alias(idc),
@@ -197,10 +187,10 @@ def tiered_jaccard_verify(cand: DataFrame, sets_a: DataFrame,
 
     tier1 = F.expr(
         "(size(s16_a) < n_a) OR (size(s16_b) < n_b) OR "
-        + H.jaccard_prebound_sql("size(array_intersect(s16_a, s16_b))",
+        + H.jaccard_prebound(SPARK, "size(array_intersect(s16_a, s16_b))",
                                  "n_a", "n_b", min_jaccard))
-    exact = F.expr(H.jaccard_ge_sql("s_a", "s_b", min_jaccard))
-    jac = F.expr(f"round({H.jaccard_sql('s_a', 's_b')}, 6)")
+    exact = F.expr(H.jaccard_ge(SPARK, "s_a", "s_b", min_jaccard))
+    jac = F.expr(f"round({H.jaccard(SPARK, 's_a', 's_b')}, 6)")
     surv = (cand
             .join(proj16(sets_a, a_col, "a").hint("shuffle_hash"), a_col)
             .join(proj16(sets_b, b_col, "b").hint("shuffle_hash"), b_col)
@@ -279,7 +269,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     if fast_hash:
         base_h = F.pmod(F.xxhash64(F.col("s")), F.lit(H.MINHASH_M))
     else:
-        base_h = H.minhash_base(F.col("s"))
+        base_h = F.expr(H.minhash_base(SPARK, "s"))
 
     # ONE aggregation pass builds everything per-document: the minhash
     # signature (min is duplicate-insensitive, so the shingle rows skip
@@ -301,7 +291,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     exploded = exploded_shingles(df, text_col, id_col, shingle_words,
                                  distinct=False)
     per_doc = exploded.withColumn("_mhb", base_h).groupBy("id").agg(
-        *[F.expr(f"min({H.minhash_perm_sql(str(i), '_mhb')}) AS h{i}")
+        *[F.expr(f"min({H.minhash_perm(SPARK, str(i), '_mhb')}) AS h{i}")
           for i in range(num_hashes)],
         F.collect_set(F.xxhash64("s")).alias("shingles"),
     )
@@ -345,8 +335,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     hcols = [f"h{i}" for i in range(num_hashes)]
     banded = per_doc.select(
         "id", "shingles", *hcols,
-        F.posexplode(F.expr(H.lsh_bands_sql(
-            f"array({', '.join(hcols)})", bands, rows))
+        F.posexplode(F.expr(H.lsh_bands(
+            SPARK, f"array({', '.join(hcols)})", bands, rows))
         ).alias("band_i", "band"),
     )
     a_side, b_side = banded.alias("a"), banded.alias("b")
@@ -372,13 +362,13 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # the join stays a shuffled-hash equi-join (plan-asserted by
     # tests/test_plan_audit.py's shuffle_hash unit).
     jac = F.expr(
-        f"round({H.jaccard_sql('a.shingles', 'b.shingles')}, 6)")
+        f"round({H.jaccard(SPARK, 'a.shingles', 'b.shingles')}, 6)")
     cond = F.expr(
         "(a.band = b.band) AND (a.id < b.id) AND ("
         + "CASE " + " ".join(f"WHEN {band_eq(i)} THEN {i}"
                              for i in range(bands)) + " END"
         + " = greatest(a.band_i, b.band_i)) AND "
-        + H.jaccard_ge_sql("a.shingles", "b.shingles", min_jaccard))
+        + H.jaccard_ge(SPARK, "a.shingles", "b.shingles", min_jaccard))
     verified = (
         a_side.hint("shuffle_hash")
         .join(b_side.hint("shuffle_hash"), cond)
@@ -422,9 +412,9 @@ def banded_ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     exploded = exploded_shingles(base, text_col, id_col, shingle_words,
                                  extra_cols=["_attr"], distinct=False,
                                  parts=parts)
-    sig = (exploded.withColumn("_mhb", H.minhash_base(F.col("s")))
+    sig = (exploded.withColumn("_mhb", F.expr(H.minhash_base(SPARK, "s")))
            .groupBy("_attr", "id").agg(
-               *[F.expr(f"min({H.minhash_perm_sql(str(i), '_mhb')}) "
+               *[F.expr(f"min({H.minhash_perm(SPARK, str(i), '_mhb')}) "
                         f"AS h{i}") for i in range(num_hashes)],
                F.collect_set(F.xxhash64("s")).alias("sids"),
            ))
@@ -435,8 +425,8 @@ def banded_ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
            else sig.persist())
     banded = sig.select(
         "id", "_attr",
-        F.explode(F.expr(H.lsh_bands_sql(
-            f"array({', '.join(f'h{i}' for i in range(num_hashes))})",
+        F.explode(F.expr(H.lsh_bands(
+            SPARK, f"array({', '.join(f'h{i}' for i in range(num_hashes))})",
             bands, rows))).alias("band"),
     ).select("id", F.concat_ws("|", "_attr", "band").alias("blk"))
     cand = (
@@ -497,8 +487,8 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     sets are xxhash64 ids (8 B/shingle; counts equal string counts
     barring a ~n²/2⁶⁵ collision, the ngram_jaccard argument).
     """
-    # SQL expression strings throughout (the r14 construction rule —
-    # this builder measured ~1,700 py4j commands in Column form)
+    # SQL expression strings throughout (this builder measured ~1,700
+    # py4j commands in Column form)
     def _rp(d: DataFrame, *cols: str) -> DataFrame:
         # pin an exchange to the bytes-derived count in the tiny-data
         # regime (sizing.small_exchange_parts); parts=None (every
@@ -661,14 +651,15 @@ def minhash_state(df: DataFrame, text_col: str = "text",
     (``minhash_band_keys``, ``dd_incremental``'s staged index,
     ``neardup_dedup_stream``'s per-batch state) derives from it, so
     the family can never silently fork from the shared SQL oracle
-    CTEs (functions/hashing.py: minhash_base_sql/minhash_perm_sql)."""
+    CTEs (functions/hashing.py: minhash_base/minhash_perm in the DuckDB
+    dialect)."""
     exploded = exploded_shingles(df, text_col, id_col, shingle_words,
                                  distinct=False)  # min is dup-insensitive
-    aggs = [F.expr(f"min({H.minhash_perm_sql(str(i), '_mhb')}) AS h{i}")
+    aggs = [F.expr(f"min({H.minhash_perm(SPARK, str(i), '_mhb')}) AS h{i}")
             for i in range(num_hashes)]
     if with_sids:
         aggs.append(F.collect_set(F.xxhash64("s")).alias("sids"))
-    return (exploded.withColumn("_mhb", H.minhash_base(F.col("s")))
+    return (exploded.withColumn("_mhb", F.expr(H.minhash_base(SPARK, "s")))
             .groupBy("id").agg(*aggs))
 
 
@@ -677,8 +668,8 @@ def lsh_band_rows(state: DataFrame, num_hashes: int,
     """(id, band) from a ``minhash_state`` frame — the exploded LSH
     band keys, exactly as ``minhash_lsh_pairs`` derives them."""
     return state.select(
-        "id", F.explode(F.expr(H.lsh_bands_sql(
-            f"array({', '.join(f'h{i}' for i in range(num_hashes))})",
+        "id", F.explode(F.expr(H.lsh_bands(
+            SPARK, f"array({', '.join(f'h{i}' for i in range(num_hashes))})",
             bands, num_hashes // bands))).alias("band"))
 
 
@@ -729,7 +720,7 @@ def block_dedup(df: DataFrame, text_col: str = "text",
     words = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(
-            F.filter(F.split(H.norm_text(F.col(text_col)), " "),
+            F.filter(F.split(F.expr(H.norm_text(SPARK, text_col)), " "),
                      lambda w: w != "")
         ).alias("pos", "w"),
     )
@@ -779,7 +770,7 @@ def simhash_table(df: DataFrame, text_col: str = "text",
         F.col(id_col).alias("id"),
         F.explode(
             F.array_distinct(
-                F.filter(F.split(H.norm_text(F.col(text_col)), " "),
+                F.filter(F.split(F.expr(H.norm_text(SPARK, text_col)), " "),
                          lambda w: w != ""))
         ).alias("w"),
     ).withColumn("h", F.md5("w"))
@@ -1036,7 +1027,7 @@ def duplicate_spans(df: DataFrame, text_col: str = "text",
     L = span_words
     ws = df.select(
         F.col(id_col).alias("id"),
-        F.filter(F.split(H.norm_text(F.col(text_col)), " "),
+        F.filter(F.split(F.expr(H.norm_text(SPARK, text_col)), " "),
                  lambda w: w != "").alias("ws"),
     )
     wins = ws.select(
@@ -1090,7 +1081,7 @@ def apply_span_dedup(df: DataFrame, text_col: str = "text",
     L = span_words
     base = df.select(
         F.col(id_col).alias("id"),
-        F.filter(F.split(H.norm_text(F.col(text_col)), " "),
+        F.filter(F.split(F.expr(H.norm_text(SPARK, text_col)), " "),
                  lambda w: w != "").alias("ws"),
     )
     words = base.select(

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import geo
+from ..functions.dialect import SPARK
 from ..functions.text import simple_name
 
 #: reference batching policy (opr-osm.json:29-31)
@@ -41,13 +42,14 @@ PLACES_PER_OPERATION = 250
 OPERATIONS_PER_BLOCK = 16
 
 
-def match_id(lat: Column, lon: Column, osm_tag: Column, osm_value: Column,
+def match_id(lat: str, lon: str, osm_tag: Column, osm_value: Column,
              name: Column) -> Column:
     """The bot's logical place identity: (6-char tile, tag, value,
     simple name) — set:all(opr:place_loc(6,.lat,.lon), .osm_tag,
-    .osm_value, opr:simple_name(.tags.name))."""
+    .osm_value, opr:simple_name(.tags.name)).  ``lat``/``lon`` are
+    column names."""
     return F.concat_ws(
-        "|", geo.olc_encode(lat, lon, 6), osm_tag, osm_value,
+        "|", F.expr(geo.olc_encode(SPARK, lat, lon, 6)), osm_tag, osm_value,
         F.coalesce(simple_name(name), F.lit("")))
 
 
@@ -109,9 +111,9 @@ def generate_sync_ops(entities: DataFrame, places: DataFrame,
     import pandas as pd
 
     looked = osm_id_lookup(entities, places, osm_tag)
-    ent_mid = match_id(F.col("lat"), F.col("lon"), F.lit(osm_tag),
+    ent_mid = match_id("lat", "lon", F.lit(osm_tag),
                        F.col("tags")[osm_tag], F.col("tags")["name"])
-    old_mid = match_id(F.col("ref.lat"), F.col("ref.lon"),
+    old_mid = match_id("ref.lat", "ref.lon",
                        F.lit(osm_tag), F.col("ref.osm_value"),
                        F.col("ref.tags")["name"])
     staged = looked.select(
@@ -121,7 +123,7 @@ def generate_sync_ops(entities: DataFrame, places: DataFrame,
         F.col("ref").alias("old_ref"),
         ent_mid.alias("new_mid"),
         F.when(F.col("ref").isNotNull(), old_mid).alias("old_mid"),
-        geo.olc_encode(F.col("lat"), F.col("lon"), 6).alias("new_tile"),
+        F.expr(geo.olc_encode(SPARK, "lat", "lon", 6)).alias("new_tile"),
         F.substring(F.md5(F.concat_ws(":", "entity_type", "id")), 1, 6)
         .alias("new_suffix"),
     )

@@ -29,11 +29,12 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import text as TX
+from ..functions.dialect import SPARK, Dialect
 from ..functions.geo import haversine_m
 
 MATCH_NAME = 1
@@ -45,54 +46,28 @@ MATCH_EMPTY = 4
 SIMILAR_PLACE_DISTANCE_M = 100.0
 
 
-def _alt_names_match(a_names: Column, b_names: Column) -> Column:
-    """Cross-product check_names over two alt-name arrays
-    (MergeUtil.java:254-284 OTHER_NAME_MATCH)."""
-    return F.exists(a_names,
-                    lambda an: F.exists(b_names,
-                                        lambda bn: TX.check_names(an, bn)))
-
-
-def match_type_col(a_name: Column, b_name: Column,
-                   a_wikidata: Column, b_wikidata: Column,
-                   a_website: Column, b_website: Column,
-                   a_alt: Column, b_alt: Column) -> Column:
-    """The cascade as a single CASE column; null = no match."""
-    a_empty = a_name.isNull() | (F.trim(a_name) == "")
-    b_empty = b_name.isNull() | (F.trim(b_name) == "")
-    return (
-        F.when(~a_empty & ~b_empty & TX.check_names(a_name, b_name),
-               F.lit(MATCH_NAME))
-        .when(TX.tag_equal_non_empty(a_wikidata, b_wikidata)
-              | TX.tag_equal_non_empty(a_website, b_website),
-              F.lit(MATCH_OTHER_TAGS))
-        .when(_alt_names_match(a_alt, b_alt), F.lit(MATCH_OTHER_NAME))
-        # EMPTY_NAME_MATCH fires when both are nameless OR when only the
-        # old/closed side is nameless ("if name appeared",
-        # MergeUtil.java:69-77) — b_empty alone does NOT match.
-        .when(a_empty, F.lit(MATCH_EMPTY))
-    )
-
-
-def match_type_expr(a_name: str, b_name: str,
-                    a_wikidata: str, b_wikidata: str,
-                    a_website: str, b_website: str,
-                    a_alt: str, b_alt: str) -> str:
-    """:func:`match_type_col` as one Spark SQL expression string — a
-    single parse instead of thousands of per-op py4j Column calls (the
-    r14 plan-construction finding; the truth-table unit pins the two
-    implementations in sync)."""
-    a_empty = f"(({a_name} IS NULL) OR (trim({a_name}) = ''))"
-    b_empty = f"(({b_name} IS NULL) OR (trim({b_name}) = ''))"
-    tier1 = (f"((NOT {a_empty}) AND (NOT {b_empty}) AND "
-             f"{TX.check_names_expr(a_name, b_name)})")
-    tier2 = (f"({TX.tag_equal_non_empty_expr(a_wikidata, b_wikidata)} OR "
-             f"{TX.tag_equal_non_empty_expr(a_website, b_website)})")
-    tier3 = (f"exists({a_alt}, an -> exists({b_alt}, bn -> "
-             f"{TX.check_names_expr('an', 'bn')}))")
-    return (f"CASE WHEN {tier1} THEN {MATCH_NAME} "
-            f"WHEN {tier2} THEN {MATCH_OTHER_TAGS} "
-            f"WHEN {tier3} THEN {MATCH_OTHER_NAME} "
+def match_type(d: Dialect, a_name: str, b_name: str,
+               a_wikidata: str, b_wikidata: str,
+               a_website: str, b_website: str,
+               a_alt: str, b_alt: str) -> str:
+    """The cascade as one CASE expression; null = no match.  ``a_*`` is
+    the closed (old) place, ``b_*`` the candidate."""
+    a_empty = f"(({a_name} IS NULL) OR ({d.trim(a_name)} = ''))"
+    b_empty = f"(({b_name} IS NULL) OR ({d.trim(b_name)} = ''))"
+    name = (f"((NOT {a_empty}) AND (NOT {b_empty}) AND "
+            f"{TX.check_names(d, a_name, b_name)})")
+    tags = (f"({TX.tag_equal_non_empty(d, a_wikidata, b_wikidata)} OR "
+            f"{TX.tag_equal_non_empty(d, a_website, b_website)})")
+    # OTHER_NAME_MATCH: check_names across the two alt-name lists
+    # (MergeUtil.java:254-284)
+    other = d.exists(a_alt, "an", d.exists(
+        b_alt, "bn", TX.check_names(d, "an", "bn")))
+    # EMPTY_NAME_MATCH fires when both are nameless OR when only the
+    # old/closed side is nameless ("if name appeared",
+    # MergeUtil.java:69-77) — b_empty alone does NOT match.
+    return (f"CASE WHEN {name} THEN {MATCH_NAME} "
+            f"WHEN {tags} THEN {MATCH_OTHER_TAGS} "
+            f"WHEN {other} THEN {MATCH_OTHER_NAME} "
             f"WHEN {a_empty} THEN {MATCH_EMPTY} END")
 
 
@@ -145,10 +120,9 @@ def merge_candidates(closed: DataFrame, active: DataFrame,
 
     c = prep(closed, "c")
     a = prep(active, "a")
-    dist = haversine_m(F.col("c_lat"), F.col("c_lon"),
-                       F.col("a_lat"), F.col("a_lon"))
-    mt = F.expr(match_type_expr(
-        "c_name", "a_name", "c_wikidata", "a_wikidata",
+    dist = F.expr(haversine_m(SPARK, "c_lat", "c_lon", "a_lat", "a_lon"))
+    mt = F.expr(match_type(
+        SPARK, "c_name", "a_name", "c_wikidata", "a_wikidata",
         "c_website", "a_website", "c_alt_names", "a_alt_names"))
     return (
         c.join(a, on="blk")

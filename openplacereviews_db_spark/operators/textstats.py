@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hashing as H
+from ..functions.dialect import SPARK
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic.  Deliberately small and hard-coded: the heuristic is the
@@ -25,8 +26,9 @@ STOPWORDS = {
 }
 
 
-def _words(text: Column) -> Column:
-    return F.filter(F.split(H.norm_text(text), " "), lambda w: w != "")
+def _words(text_col: str) -> Column:
+    return F.filter(F.split(F.expr(H.norm_text(SPARK, text_col)), " "),
+                    lambda w: w != "")
 
 
 def _stopword_hits(words: Column, lang: str) -> Column:
@@ -56,7 +58,7 @@ def language_id(df: DataFrame, text_col: str = "text",
     them — inlining the split into every ratio multiplies the
     expression tree past Catalyst's comfortable analysis size."""
     base = df.select(F.col(id_col).alias("id"),
-                     _words(F.col(text_col)).alias("_w"))
+                     _words(text_col).alias("_w"))
     pred, best = _lang_cols(F.col("_w"))
     return base.select(
         "id",
@@ -73,18 +75,17 @@ def quality_score(df: DataFrame, text_col: str = "text",
     ratio, english-stopword ratio.  Score = clipped linear combination —
     the standard shape of pre-training corpus filters.
     """
-    t = F.col(text_col)
-    return df.select(F.col(id_col).alias("id"), *_quality_cols(t))
+    return df.select(F.col(id_col).alias("id"), *_quality_cols(text_col))
 
 
 def _quality_score_from(t: Column, words: Column) -> Column:
     """The compound quality score built from an ALREADY-projected word
-    array — callers that carry ``_words(t)`` in a column (the fused
+    array — callers that carry ``_words(text_col)`` in a column (the fused
     ``corpus_features`` projection) must not re-split the text per
     expression instance: array HOFs are interpreted (no codegen, no
     common-subexpression elimination), so every extra ``_words`` copy
     re-runs normalize+split+filter per row.  Same arithmetic as
-    ``_quality_cols`` (which passes ``words=_words(t)``)."""
+    ``_quality_cols`` (which passes ``words=_words(text_col)``)."""
     n_words = F.size(words)
     n_chars = F.length(t)
     n_punct = F.length(t) - F.length(
@@ -111,8 +112,9 @@ def _quality_score_from(t: Column, words: Column) -> Column:
     )
 
 
-def _quality_cols(t: Column) -> list[Column]:
-    words = _words(t)
+def _quality_cols(text_col: str) -> list[Column]:
+    t = F.col(text_col)
+    words = _words(text_col)
     n_words = F.size(words)
     n_chars = F.length(t)
     mean_wlen = F.round(
@@ -173,7 +175,7 @@ def corpus_features(df: DataFrame, text_col: str = "text",
     identical to joining their outputs."""
     t = F.col(text_col)
     base = df.select(F.col(id_col).alias("id"), t.alias("_t"),
-                     _words(t).alias("_w"))
+                     _words(text_col).alias("_w"))
     langs = sorted(STOPWORDS)
     n = F.greatest(F.size("_w"), F.lit(1))
     staged = base.select(
@@ -190,7 +192,7 @@ def corpus_features(df: DataFrame, text_col: str = "text",
         .alias("quality_score"),
         F.when(best > 0, pred).otherwise(F.lit("und")).alias("pred_lang"),
         _token_cols(F.col("_t"))[2],
-        H.fingerprint(F.col("_t")).alias("fp"),
+        F.expr(H.fingerprint(SPARK, "_t")).alias("fp"),
     )
 
 
@@ -201,7 +203,7 @@ def fingerprints(df: DataFrame, text_col: str = "text",
 
     fp = df.select(
         F.col(id_col).alias("id"),
-        H.fingerprint(F.col(text_col)).alias("fingerprint"),
+        F.expr(H.fingerprint(SPARK, text_col)).alias("fingerprint"),
     )
     return fp.join(simhash_table(df, text_col, id_col), on="id").select(
         "id", "fingerprint", "simhash"

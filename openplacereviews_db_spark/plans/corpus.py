@@ -16,8 +16,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import hashing as H
+from ..functions import text as T
+from ..functions.dialect import DUCKDB, SPARK
 from ..functions.sizing import small_exchange_parts, table_bytes
 from ..operators import dedup, kmeans, similarity, textstats
+from ..operators.curation import hash_uniform_sql
 from ..sources.testdata import load_table
 
 # Normalized text / word list, as DuckDB SQL fragments (must mirror
@@ -131,7 +134,7 @@ def tx_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select(
         "doc_id", "lang", "n_chars",
         F.explode(F.array_distinct(
-            F.filter(F.split(H.norm_text(F.col("text")), " "),
+            F.filter(F.split(F.expr(H.norm_text(SPARK, "text")), " "),
                      lambda w: w != ""))).alias("w"),
     )
     hits = (
@@ -329,13 +332,13 @@ _SIMHASH_SQL = """
 # operators compute (functions/hashing.py: minhash_base/minhash_perm);
 # integer arithmetic is engine-independent, so the band keys are
 # bit-identical.
-from ..functions.hashing import minhash_base_sql as _mhb_sql  # noqa: E402
-from ..functions.hashing import minhash_perm_sql as _mhp_sql  # noqa: E402
+
+_MH_PERM = H.minhash_perm(DUCKDB, "seed", H.minhash_base(DUCKDB, "s"))
 
 _MINHASH_MINS_BANDS = f"""
         mins AS (
             SELECT doc_id, seed,
-                   min({_mhp_sql('seed', _mhb_sql('s'))}) AS mh
+                   min({_MH_PERM}) AS mh
             FROM sh, unnest(sh.shingles) AS u(s),
                  generate_series(0, 15) AS g(seed)
             GROUP BY doc_id, seed),
@@ -1106,9 +1109,7 @@ def tx_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["tx_group_split"] = tx_group_split
 
-from ..operators.curation import hash_uniform_sql as _husql  # noqa: E402
-
-_CANON_U = f"round({_husql('canonical_id')}, 9)"
+_CANON_U = f"round({hash_uniform_sql('canonical_id')}, 9)"
 
 ORACLES["tx_group_split"] = f"""
     WITH groups AS ({ORACLES["dd_dup_groups"]}),
@@ -1137,7 +1138,6 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from ..functions import hashing as H
     from ..operators.ordered import global_cumsum
 
     docs = _docs(spark, sf_dir)
@@ -1392,12 +1392,11 @@ def tx_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from ..functions import hashing as H
 
     docs = _docs(spark, sf_dir)
     words = docs.select(
         F.col("doc_id").alias("id"),
-        F.explode(F.filter(F.split(H.norm_text(F.col("text")), " "),
+        F.explode(F.filter(F.split(F.expr(H.norm_text(SPARK, "text")), " "),
                            lambda w: w != "")).alias("term"))
     tf = words.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("dfreq"))
@@ -1608,7 +1607,7 @@ def chunk_windows(docs: DataFrame, n: int = _CHUNK_N,
     chunk explosion is the same ~len/stride amplification as
     tokenization and runs scan-parallel at any corpus size.
     """
-    words = F.filter(F.split(H.norm_text(F.col("text")), " "),
+    words = F.filter(F.split(F.expr(H.norm_text(SPARK, "text")), " "),
                      lambda w: w != "")
     base = (docs.select("doc_id", words.alias("lw"))
             .withColumn("n", F.size("lw")).where(F.col("n") > 0))
@@ -1977,8 +1976,6 @@ def tx_url_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-stage dedup every web-corpus pipeline runs before any content
     hashing.  Pure codegen regexp chain, one canonical-key shuffle.
     """
-    from ..functions import text as T
-
     d = _docs(spark, sf_dir)
     num = (F.col("doc_id") % 50).cast("string")
     lower_base = F.concat(F.lit("http://www."), F.col("source"),
@@ -1996,7 +1993,7 @@ def tx_url_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(v == 4, F.concat(lower_base, path, F.lit("/")))
         .otherwise(F.concat(lower_base, path)))
     withc = (d.select("doc_id", url.alias("url"))
-             .withColumn("canon", T.url_canonicalize(F.col("url"))))
+             .withColumn("canon", F.expr(T.url_canonicalize(SPARK, "url"))))
     return (withc.groupBy("canon")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.countDistinct("url").alias("n_urls"),
@@ -2005,7 +2002,6 @@ def tx_url_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["tx_url_canon"] = tx_url_canon
 
-from ..functions.text import url_canonicalize_sql as _ucsql  # noqa: E402
 
 _U_LOWER = "'http://www.' || source || '.example.com'"
 _U_UPPER = "'HTTP://WWW.' || upper(source) || '.EXAMPLE.COM'"
@@ -2026,7 +2022,7 @@ ORACLES["tx_url_canon"] = f"""
                END AS url
         FROM documents
     ), c AS (
-        SELECT doc_id, url, {_ucsql('url')} AS canon FROM u
+        SELECT doc_id, url, {T.url_canonicalize(DUCKDB, 'url')} AS canon FROM u
     )
     SELECT canon, COUNT(*) AS n_docs,
            COUNT(DISTINCT url) AS n_urls, MIN(doc_id) AS first_doc

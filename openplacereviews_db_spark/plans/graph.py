@@ -23,6 +23,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import geo
+from ..functions.dialect import DUCKDB, SPARK
 from ..sources.testdata import load_table
 
 _DAMP = 0.85
@@ -187,8 +189,6 @@ def g11_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     tile blocking loses no edge and the orientation produces each
     triangle exactly once.
     """
-    from ..functions import geo
-
     pts = _tri_points(spark, sf_dir)
     probes = pts.select(
         "id", "lat", "lon",
@@ -198,8 +198,7 @@ def g11_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("id_b"), F.col("lat").alias("lat_b"),
         F.col("lon").alias("lon_b"),
         geo.grid_tile(F.col("lat"), F.col("lon"), _TRI_CELL).alias("tile"))
-    dist = geo.haversine_m(F.col("lat"), F.col("lon"),
-                           F.col("lat_b"), F.col("lon_b"))
+    dist = F.expr(geo.haversine_m(SPARK, "lat", "lon", "lat_b", "lon_b"))
     edges = (probes.join(build, on="tile")
              .where(F.col("id") < F.col("id_b"))
              .where(F.round(dist, 3) < _TRI_RADIUS_M)
@@ -219,9 +218,7 @@ QUERIES["g11_triangle_count"] = g11_triangle_count
 
 
 def _g11_oracle() -> str:
-    from ..functions import geo
-
-    hav = geo.haversine_m_sql("x.lat", "x.lon", "y.lat", "y.lon")
+    hav = geo.haversine_m(DUCKDB, "x.lat", "x.lon", "y.lat", "y.lon")
     return f"""
     WITH pts AS (
         SELECT event_id AS id,

@@ -26,9 +26,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import geo
+from ..functions import text as TX
+from ..functions.dialect import DUCKDB, SPARK
 from ..operators import changelog as C
 from ..operators import cluster
 from ..sources import places as P
+from ..sources.places import synthetic_tile
 from ..sources.testdata import load_table, stage_plan
 
 TOMBSTONE = "2021-06-15T00:00:00"
@@ -55,8 +58,7 @@ def synthetic_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     c = load_table(spark, "customer", sf_dir)
     k = F.col("c_custkey")
-    lat, lon = P.synthetic_lat(k), P.synthetic_lon(k)
-    obj_id = F.concat_ws(",", geo.olc_encode(lat, lon, 6),
+    obj_id = F.concat_ws(",", F.expr(synthetic_tile(SPARK)),
                          F.substring(F.md5(k.cast("string")), 1, 6))
     change = (
         F.when(k % 3 == 0, F.lit(
@@ -78,7 +80,8 @@ def synthetic_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             action.alias("action"),
             F.lit(None).cast("string").alias("doc"),
             F.when(action == "edit", change).alias("change"),
-            lat.alias("lat"), lon.alias("lon"),
+            F.expr(P.synthetic_lat(SPARK)).alias("lat"),
+            F.expr(P.synthetic_lon(SPARK)).alias("lon"),
         )
         .where(action.isNotNull())
     )
@@ -167,10 +170,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "history_report": history_report,
 }
 
-_TILE = geo.olc_encode_sql(
-    "(((c_custkey * 7919) % 16000) / CAST(100.0 AS DOUBLE) - CAST(80.0 AS DOUBLE))",
-    "(((c_custkey * 104729) % 36000) / CAST(100.0 AS DOUBLE) - CAST(180.0 AS DOUBLE))",
-    6)
+_TILE = synthetic_tile(DUCKDB)
 
 _OPS_CTE = f"""
     ops AS (
@@ -265,9 +265,6 @@ def j7_history_full_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: one row per (tombstoned place, live similar neighbor).
     """
-    from ..functions.geo import haversine_m
-    from ..functions.text import check_names_expr
-
     c = load_table(spark, "customer", sf_dir)
     k = F.col("c_custkey")
     tombstoned = (
@@ -276,24 +273,23 @@ def j7_history_full_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                           (k % 30).cast("int"))
                .between(WINDOW_START, WINDOW_END))
         .select(k.alias("key"),
-                P.synthetic_lat(k).alias("lat"),
-                P.synthetic_lon(k).alias("lon"),
+                F.expr(P.synthetic_lat(SPARK)).alias("lat"),
+                F.expr(P.synthetic_lon(SPARK)).alias("lon"),
                 F.concat_ws(" ", F.col("c_name"),
                             F.lower("c_mktsegment")).alias("name"))
     )
     active = P.synthetic_active_flat(spark, sf_dir)
     t = tombstoned.alias("t")
     a = active.alias("a")
-    dist = haversine_m(F.col("t.lat"), F.col("t.lon"),
-                       F.col("a.lat"), F.col("a.lon"))
-    blk_t = F.substring(geo.olc_encode(F.col("t.lat"), F.col("t.lon"), 6),
+    dist = F.expr(geo.haversine_m(SPARK, "t.lat", "t.lon", "a.lat", "a.lon"))
+    blk_t = F.substring(F.expr(geo.olc_encode(SPARK, "t.lat", "t.lon", 6)),
                         1, 4)
     blk_a = F.substring(F.col("a.tile_id"), 1, 4)
     return (
         t.join(a, blk_t == blk_a)
         .withColumn("dist_m", dist)
         .where(F.col("dist_m") <= 150)
-        .where(F.expr(check_names_expr("t.name", "a.name")))
+        .where(F.expr(TX.check_names(SPARK, "t.name", "a.name")))
         .select(F.col("t.key").alias("closed_key"),
                 F.col("a.id").alias("live_id"),
                 F.round("dist_m", 2).alias("dist_m"))
@@ -302,13 +298,11 @@ def j7_history_full_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["j7_history_full_check"] = j7_history_full_check
 
-from ..functions.text import check_names_sql as _cn_sql  # noqa: E402
-from ..functions.geo import haversine_m_sql as _hv_sql  # noqa: E402
-
-_T_LAT = ("(((t.k * 7919) % 16000) / CAST(100.0 AS DOUBLE)"
-          " - CAST(80.0 AS DOUBLE))")
-_T_LON = ("(((t.k * 104729) % 36000) / CAST(100.0 AS DOUBLE)"
-          " - CAST(180.0 AS DOUBLE))")
+_T_LAT = P.synthetic_lat(DUCKDB, "t.k")
+_T_LON = P.synthetic_lon(DUCKDB, "t.k")
+_T_DIST = geo.haversine_m(DUCKDB, _T_LAT, _T_LON, "a.lat", "a.lon")
+_T_NAMES_MATCH = TX.check_names(
+    DUCKDB, "(t.c_name || ' ' || lower(t.c_mktsegment))", "a.name")
 
 ORACLES["j7_history_full_check"] = f"""
     WITH {P.flat_snapshots_sql_ctes()},
@@ -320,12 +314,12 @@ ORACLES["j7_history_full_check"] = f"""
               BETWEEN DATE '{WINDOW_START}' AND DATE '{WINDOW_END}'
     )
     SELECT t.k AS closed_key, a.id AS live_id,
-           round({_hv_sql(_T_LAT, _T_LON, 'a.lat', 'a.lon')}, 2) AS dist_m
+           round({_T_DIST}, 2) AS dist_m
     FROM tomb t JOIN active a
-      ON substr({geo.olc_encode_sql(_T_LAT, _T_LON, 6)}, 1, 4)
+      ON substr({geo.olc_encode(DUCKDB, _T_LAT, _T_LON, 6)}, 1, 4)
          = substr(a.tile_id, 1, 4)
-    WHERE {_hv_sql(_T_LAT, _T_LON, 'a.lat', 'a.lon')} <= 150.0
-      AND {_cn_sql("(t.c_name || ' ' || lower(t.c_mktsegment))", "a.name")}
+    WHERE {_T_DIST} <= 150.0
+      AND {_T_NAMES_MATCH}
 """
 
 

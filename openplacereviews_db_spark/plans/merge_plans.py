@@ -2,8 +2,9 @@
 
 The match cascade runs over the deterministic flat snapshots
 (`sources.places.synthetic_active_flat` / `synthetic_closed_flat`)
-whose SQL mirror plus the `functions.text.check_names_sql` cascade
-makes the fuzzy join value-checkable end to end — tile blocking,
+whose SQL mirror plus the DuckDB dialect of the match cascade
+(`operators.place_merge.match_type`) makes the fuzzy join
+value-checkable end to end — tile blocking,
 haversine threshold, Levenshtein tiers and all.
 
 ``g2_proximity_groups`` (greedy clustering) is genuinely non-SQL
@@ -21,8 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import geo
-from ..functions import text as TX
-from ..functions.geo import haversine_m_sql
+from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..operators import cluster, place_merge
 from ..sources import places as P
 
@@ -102,36 +102,23 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 
-def _cascade_sql(c: str, a: str) -> str:
-    """match_type CASE mirroring operators.place_merge.match_type_col."""
-    c_name, a_name = f"{c}.name", f"{a}.name"
-    c_empty = f"({c_name} IS NULL OR trim({c_name}) = '')"
-    a_empty = f"({a_name} IS NULL OR trim({a_name}) = '')"
-    tier1 = (f"(NOT {c_empty} AND NOT {a_empty} AND "
-             f"{TX.check_names_sql(c_name, a_name)})")
-    tier2 = (f"({TX.tag_equal_non_empty_sql(f'{c}.wikidata', f'{a}.wikidata')}"
-             f" OR {TX.tag_equal_non_empty_sql(f'{c}.website', f'{a}.website')})")
-    tier3 = (f"(len(list_filter({c}.alt_names, cn -> len(list_filter("
-             f"{a}.alt_names, an -> {TX.check_names_sql('cn', 'an')})) > 0)) > 0)")
-    # EMPTY_NAME_MATCH: both nameless OR only the closed side nameless
-    # (MergeUtil.java:69-77)
-    tier4 = f"{c_empty}"
-    return (f"(CASE WHEN {tier1} THEN 1 WHEN {tier2} THEN 2 "
-            f"WHEN {tier3} THEN 3 WHEN {tier4} THEN 4 END)")
+#: the match-type cascade over the closed (c) x active (a) join
+_CASCADE = place_merge.match_type(
+    DUCKDB, "c.name", "a.name", "c.wikidata", "a.wikidata",
+    "c.website", "a.website", "c.alt_names", "a.alt_names")
 
-
-_DIST = haversine_m_sql("c.lat", "c.lon", "a.lat", "a.lon")
+_DIST = geo.haversine_m(DUCKDB, "c.lat", "c.lon", "a.lat", "a.lon")
 
 _CANDS_SQL = f"""
     cands AS (
         SELECT c.id AS c_id, a.id AS a_id,
-               {_cascade_sql('c', 'a')} AS match_type,
+               {_CASCADE} AS match_type,
                {_DIST} AS dist_m
         FROM closed c JOIN active a
           ON substr(c.tile_id, 1, 4) = substr(a.tile_id, 1, 4)
          AND c.id != a.id
         WHERE {_DIST} <= 100.0
-          AND {_cascade_sql('c', 'a')} IS NOT NULL
+          AND {_CASCADE} IS NOT NULL
     )"""
 
 ORACLES: dict[str, str] = {
@@ -212,11 +199,11 @@ QUERIES["j3_border_correct"] = j3_border_correct
 ORACLES["j3_border_correct"] = f"""
     WITH {P.flat_snapshots_sql_ctes()}
     SELECT c.id AS c_id, a.id AS a_id,
-           {_cascade_sql('c', 'a')} AS match_type,
+           {_CASCADE} AS match_type,
            round({_DIST}, 2) AS dist_m
     FROM closed c JOIN active a ON c.id != a.id
     WHERE {_DIST} <= 100.0
-      AND {_cascade_sql('c', 'a')} IS NOT NULL
+      AND {_CASCADE} IS NOT NULL
 """
 
 
@@ -228,7 +215,7 @@ def a5_merge_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The three counters all derive from the cascade join; left lazy it
     # executes 3x (count / picks window / closes anti-join).  One eager
     # checkpoint of the projected pairs runs it once (the g2 pattern;
-    # whitelisted in the plan audit's EAGER_BUILD_OK with the r14
+    # whitelisted in the plan audit's EAGER_BUILD_OK with its
     # measurement).
     cands = (place_merge.merge_candidates(closed, active)
              .select("c_id", "a_id", "match_type", "dist_m")
@@ -405,22 +392,12 @@ ORACLES["s14_pack_ops"] = """
 # M12: the reference's OWN merge corpora through the cascade
 # ---------------------------------------------------------------------------
 
-def _cascade_cols_sql(c_name: str, a_name: str, c_wd: str, a_wd: str,
-                      c_web: str, a_web: str, c_alt: str,
-                      a_alt: str) -> str:
-    """:func:`_cascade_sql` over explicit column names (no table
-    aliases), for corpora that arrive as flat pair rows."""
-    c_empty = f"({c_name} IS NULL OR trim({c_name}) = '')"
-    a_empty = f"({a_name} IS NULL OR trim({a_name}) = '')"
-    tier1 = (f"(NOT {c_empty} AND NOT {a_empty} AND "
-             f"{TX.check_names_sql(c_name, a_name)})")
-    tier2 = (f"({TX.tag_equal_non_empty_sql(c_wd, a_wd)}"
-             f" OR {TX.tag_equal_non_empty_sql(c_web, a_web)})")
-    tier3 = (f"(len(list_filter({c_alt}, cn -> len(list_filter("
-             f"{a_alt}, an -> {TX.check_names_sql('cn', 'an')})) > 0))"
-             f" > 0)")
-    return (f"(CASE WHEN {tier1} THEN 1 WHEN {tier2} THEN 2 "
-            f"WHEN {tier3} THEN 3 WHEN {c_empty} THEN 4 END)")
+def _fixture_match_type(d: Dialect, c_alt: str, a_alt: str) -> str:
+    """The cascade over one fixture pair row, with the given alt-name
+    lists."""
+    return place_merge.match_type(
+        d, "c_name", "a_name", "c_wikidata", "a_wikidata",
+        "c_website", "a_website", c_alt, a_alt)
 
 
 def m12_fixture_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -428,7 +405,7 @@ def m12_fixture_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``merge/places.json`` MUST-merge pairs and
     ``merge/places_not_merge.json`` negatives,
     ``MergePlaceBotTest.java:39-72``) replayed through the real cascade
-    (``operators/place_merge.py:match_type_col``), per pair:
+    (``operators/place_merge.py:match_type``), per pair:
 
     - ``match_type`` — the cascade verdict on the full alt-name lists
       (``getOtherPlaceName`` includes ``old_name``,
@@ -445,19 +422,15 @@ def m12_fixture_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The corpus is 12 rows of driver-side data (reference test
     resources), so the plan is a pure local projection; the oracle
-    recomputes every verdict through the independent SQL mirror of the
+    recomputes every verdict through the DuckDB dialect of the same
     cascade over the identical VALUES rows — Levenshtein tiers, token
     normalization and all.
     """
     from ..sources import ref_fixtures as RF
 
     df = spark.createDataFrame(RF.merge_pair_rows(), RF.PAIR_SCHEMA)
-    mt = F.expr(place_merge.match_type_expr(
-        "c_name", "a_name", "c_wikidata", "a_wikidata",
-        "c_website", "a_website", "c_alt", "a_alt"))
-    mt_core = F.expr(place_merge.match_type_expr(
-        "c_name", "a_name", "c_wikidata", "a_wikidata",
-        "c_website", "a_website", "c_alt_core", "a_alt_core"))
+    mt = F.expr(_fixture_match_type(SPARK, "c_alt", "a_alt"))
+    mt_core = F.expr(_fixture_match_type(SPARK, "c_alt_core", "a_alt_core"))
     out = df.select("fixture", "idx", "c_name", "a_name",
                     mt.alias("match_type"), mt_core.alias("match_type_core"))
     return out.select(
@@ -473,12 +446,8 @@ def m12_fixture_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _m12_oracle() -> str:
     from ..sources import ref_fixtures as RF
 
-    full = _cascade_cols_sql(
-        "c_name", "a_name", "c_wikidata", "a_wikidata",
-        "c_website", "a_website", "c_alt", "a_alt")
-    core = _cascade_cols_sql(
-        "c_name", "a_name", "c_wikidata", "a_wikidata",
-        "c_website", "a_website", "c_alt_core", "a_alt_core")
+    full = _fixture_match_type(DUCKDB, "c_alt", "a_alt")
+    core = _fixture_match_type(DUCKDB, "c_alt_core", "a_alt_core")
     # false_merge / missed_merge are LITERAL zero on the oracle side:
     # the reference's ground truth, not a recomputation — a cascade
     # regression that merges a negative or misses a positive

@@ -21,8 +21,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.dialect import DUCKDB, SPARK
 from ..operators import changelog as C
 from ..sources import staging
+from ..sources.places import synthetic_tile
 from ..sources.testdata import load_table
 
 
@@ -243,8 +245,8 @@ def m1m4_sync_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     entities = c.where(k % 2 == 0).select(
         F.lit("node").alias("entity_type"),
         k.cast("long").alias("id"),
-        P.synthetic_lat(k).alias("lat"),
-        P.synthetic_lon(k).alias("lon"),
+        F.expr(P.synthetic_lat(SPARK)).alias("lat"),
+        F.expr(P.synthetic_lon(SPARK)).alias("lon"),
         F.create_map(F.lit("name"), name,
                      F.lit("amenity"), F.lower("c_mktsegment")).alias("tags"),
         (2 + k % 5).cast("int").alias("version"),
@@ -257,13 +259,7 @@ def m1m4_sync_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["m1m4_sync_ops"] = m1m4_sync_ops
 
-from ..functions.geo import olc_encode_sql as _olc_sql  # noqa: E402
-
-_SYNC_LAT = ("(((c_custkey * 7919) % 16000) / CAST(100.0 AS DOUBLE)"
-             " - CAST(80.0 AS DOUBLE))")
-_SYNC_LON = ("(((c_custkey * 104729) % 36000) / CAST(100.0 AS DOUBLE)"
-             " - CAST(180.0 AS DOUBLE))")
-_SYNC_TILE = _olc_sql(_SYNC_LAT, _SYNC_LON, 6)
+_SYNC_TILE = synthetic_tile(DUCKDB)
 
 ORACLES["m1m4_sync_ops"] = f"""
     WITH ent AS (

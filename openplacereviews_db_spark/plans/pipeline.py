@@ -16,9 +16,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import hashing as H
+from ..functions.dialect import DUCKDB
 from ..operators import curation
+from ..operators import sketches as SK
 from ..sources.testdata import load_table
 from ..streaming import pipelines as sp
+from .corpus import ORACLES as CORPUS_ORACLES
+from .temporal import ORACLES as TEMPORAL_ORACLES
 
 _NORM = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 _WORDS = f"list_filter(string_split({_NORM}, ' '), w -> w <> '')"
@@ -318,17 +323,13 @@ ORACLES: dict[str, str] = {
 
 # X19's finished stream equals the batch LSH output exactly (see
 # streaming/pipelines.py:neardup_once) — it shares the batch oracle.
-from .corpus import ORACLES as _CORPUS_ORACLES  # noqa: E402
-
-ORACLES["st_neardup_pairs"] = _CORPUS_ORACLES["dd_minhash_lsh"]
+ORACLES["st_neardup_pairs"] = CORPUS_ORACLES["dd_minhash_lsh"]
 
 # first-SEEN-wins under the deterministic batch order (evens stream
 # first): min even doc_id of the group when one exists, else min odd
-from ..functions.hashing import fingerprint_sql as _fp_sql  # noqa: E402
-
 ORACLES["st_exact_dedup"] = f"""
     WITH d AS (
-        SELECT doc_id, {_fp_sql('text')} AS fp
+        SELECT doc_id, {H.fingerprint(DUCKDB, 'text')} AS fp
         FROM documents WHERE length(text) > 0
     )
     SELECT fp,
@@ -379,14 +380,12 @@ ORACLES["st_enrich_join"] = """
 """
 
 
-from ..operators import sketches as _SK  # noqa: E402
-
 # the stream must land on the direct batch build's registers — same
 # oracle as sk_hll_distinct minus the exact count (register-only state
 # deliberately cannot produce one)
 ORACLES["st_hll_distinct"] = (
     "SELECT grp, n_buckets, n_est FROM ("
-    + _SK.hll_distinct_sql("events", "event_type", "user_id")
+    + SK.hll_distinct_sql("events", "event_type", "user_id")
     + ") t"
 )
 
@@ -401,6 +400,4 @@ def st_scd2_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["st_scd2_upsert"] = st_scd2_upsert
 
-from .temporal import ORACLES as _TEMPORAL_ORACLES  # noqa: E402
-
-ORACLES["st_scd2_upsert"] = _TEMPORAL_ORACLES["x71_scd2_build"]
+ORACLES["st_scd2_upsert"] = TEMPORAL_ORACLES["x71_scd2_build"]

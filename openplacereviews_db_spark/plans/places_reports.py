@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import geo
+from ..functions import geometry as GM
+from ..functions.dialect import DUCKDB, SPARK
 from ..sources import places as P
 from ..sources.testdata import load_table
 
@@ -148,7 +150,7 @@ def geoall_area_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     column pruning reaches the parquet scan."""
     pl = P.synthetic_places(spark, sf_dir).select("tile_id", "deleted")
     area = F.substring("tile_id", 1, 4)
-    clat, clon = geo.olc_decode_center(F.col("area"), 4)
+    clat, clon = map(F.expr, geo.olc_decode_center(SPARK, "area", 4))
     return (
         pl.where(F.col("deleted").isNull())
         .select(area.alias("area"))
@@ -179,7 +181,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "p2_main_osm_element": p2_main_osm_element,
 }
 
-_DECODE_LAT4, _DECODE_LON4 = geo.olc_decode_center_sql("area", 4)
+_DECODE_LAT4, _DECODE_LON4 = geo.olc_decode_center(DUCKDB, "area", 4)
 
 def _cap_first_sql(expr: str) -> str:
     """SQL mirror of ``_cap_first`` (capitalizeFirstLetter, not initcap)."""
@@ -265,12 +267,10 @@ ORACLES: dict[str, str] = {
 def p12_mercator_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mercator (slippy-map) tiling of the live corpus at z12 — pure
     column arithmetic (geometry kit), counted per tile."""
-    from ..functions import geometry as GM
-
     pl = P.synthetic_places(spark, sf_dir).where(F.col("deleted").isNull())
     return (
-        pl.select(GM.mercator_tile_x(F.col("lon"), 12).alias("tx"),
-                  GM.mercator_tile_y(F.col("lat"), 12).alias("ty"))
+        pl.select(F.expr(GM.mercator_tile_x(SPARK, "lon", 12)).alias("tx"),
+                  F.expr(GM.mercator_tile_y(SPARK, "lat", 12)).alias("ty"))
         .groupBy("tx", "ty")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -306,13 +306,11 @@ def g7_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     a ZORDER rewrite, i.e. the data-skipping index a bbox scan probes.
     Quantized coords are projected to columns first; the interleave
     references them 32 times (plan-size discipline)."""
-    from ..functions import geometry as GM
-
     pl = P.synthetic_places(spark, sf_dir).where(F.col("deleted").isNull())
     q = pl.select(
-        GM.zorder_quantize_lon(F.col("lon")).alias("qx"),
-        GM.zorder_quantize_lat(F.col("lat")).alias("qy"))
-    z = q.select(GM.zorder_interleave(F.col("qx"), F.col("qy")).alias("z"))
+        F.expr(GM.zorder_quantize_lon(SPARK, "lon")).alias("qx"),
+        F.expr(GM.zorder_quantize_lat(SPARK, "lat")).alias("qy"))
+    z = q.select(F.expr(GM.zorder_interleave(SPARK, "qx", "qy")).alias("z"))
     return (
         z.groupBy(F.shiftright(F.col("z"), 20).alias("zcell"))
         .agg(F.count(F.lit(1)).alias("n"),
@@ -364,17 +362,14 @@ def g8_zcell_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly what the oracle runs, proving the pruning loses
     nothing.  Aggregated to (placetype, n, n_deleted) per the report
     shape."""
-    from ..functions import geometry as GM
-
     lat0, lat1, lon0, lon1 = _G8_BBOX
     pl = P.synthetic_places(spark, sf_dir)
     q = pl.select(
         "placetype", "deleted", "lat", "lon",
-        GM.zorder_quantize_lon(F.col("lon")).alias("qx"),
-        GM.zorder_quantize_lat(F.col("lat")).alias("qy"))
-    z = q.withColumn(
-        "zcell", F.shiftright(
-            GM.zorder_interleave(F.col("qx"), F.col("qy")), 20))
+        F.expr(GM.zorder_quantize_lon(SPARK, "lon")).alias("qx"),
+        F.expr(GM.zorder_quantize_lat(SPARK, "lat")).alias("qy"))
+    z = q.withColumn("zcell", F.expr(
+        f"shiftright({GM.zorder_interleave(SPARK, 'qx', 'qy')}, 20)"))
     pruned = z.where(F.col("zcell").isin(_g8_cover_cells()))
     exact = pruned.where(
         (F.col("lat") >= lat0) & (F.col("lat") <= lat1)
@@ -391,16 +386,12 @@ QUERIES["g3_tile_grid"] = g3_tile_grid
 QUERIES["g7_zorder"] = g7_zorder
 QUERIES["g8_zcell_scan"] = g8_zcell_scan
 
-from ..functions import geometry as _GM  # noqa: E402
-
-_MERC_LAT = ("(((c_custkey * 7919) % 16000) / CAST(100.0 AS DOUBLE)"
-             " - CAST(80.0 AS DOUBLE))")
-_MERC_LON = ("(((c_custkey * 104729) % 36000) / CAST(100.0 AS DOUBLE)"
-             " - CAST(180.0 AS DOUBLE))")
+_MERC_LAT = P.synthetic_lat(DUCKDB)
+_MERC_LON = P.synthetic_lon(DUCKDB)
 
 ORACLES["p12_mercator_tiles"] = f"""
-    SELECT {_GM.mercator_tile_x_sql(_MERC_LON, 12)} AS tx,
-           {_GM.mercator_tile_y_sql(_MERC_LAT, 12)} AS ty,
+    SELECT {GM.mercator_tile_x(DUCKDB, _MERC_LON, 12)} AS tx,
+           {GM.mercator_tile_y(DUCKDB, _MERC_LAT, 12)} AS ty,
            COUNT(*) AS cnt
     FROM customer WHERE c_custkey % 11 != 0
     GROUP BY 1, 2
@@ -418,11 +409,11 @@ ORACLES["g8_zcell_scan"] = f"""
 
 ORACLES["g7_zorder"] = f"""
     WITH q AS (
-        SELECT {_GM.zorder_quantize_lon_sql(_MERC_LON)} AS qx,
-               {_GM.zorder_quantize_lat_sql(_MERC_LAT)} AS qy
+        SELECT {GM.zorder_quantize_lon(DUCKDB, _MERC_LON)} AS qx,
+               {GM.zorder_quantize_lat(DUCKDB, _MERC_LAT)} AS qy
         FROM customer WHERE c_custkey % 11 != 0
     ), z AS (
-        SELECT {_GM.zorder_interleave_sql('qx', 'qy')} AS z FROM q
+        SELECT {GM.zorder_interleave(DUCKDB, 'qx', 'qy')} AS z FROM q
     )
     SELECT (z >> 20) AS zcell, COUNT(*) AS n,
            MIN(z) AS min_z, MAX(z) AS max_z
@@ -575,8 +566,8 @@ def g13_hex_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form lat/lon over c_custkey (the s1/geo convention, SQL
     mirror below).
     """
-    lat = P.synthetic_lat(F.col("c_custkey"))
-    lon = P.synthetic_lon(F.col("c_custkey"))
+    lat = F.expr(P.synthetic_lat(SPARK))
+    lon = F.expr(P.synthetic_lon(SPARK))
     q = (F.lit(_HEX_A) * lon - F.lit(_HEX_13) * lat) / F.lit(_HEX_SIZE)
     r = (F.lit(_HEX_23) * lat) / F.lit(_HEX_SIZE)
     base = (load_table(spark, "customer", sf_dir)

@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import geo
+from ..functions import text as T
+from ..functions.dialect import DUCKDB, SPARK
 from ..sources.testdata import load_table
 
 
@@ -258,7 +260,7 @@ def j2_proximity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lon").alias("lon_b"),
         geo.grid_tile(F.col("lat"), F.col("lon"), cell).alias("tile"),
     )
-    dist = geo.haversine_m(F.col("lat"), F.col("lon"), F.col("lat_b"), F.col("lon_b"))
+    dist = F.expr(geo.haversine_m(SPARK, "lat", "lon", "lat_b", "lon_b"))
     return (
         probes.join(build, on="tile")
         .where(F.col("id") != F.col("id_b"))
@@ -409,9 +411,10 @@ def o1_distance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sort-by-distance + limit (O1, OsmMapUtils.java:292-299): 100 events
     nearest to a fixed point, deterministic ordering."""
     ev = _t(spark, sf_dir, "events")
-    lat = (F.col("event_id") % 2000) * 0.001
-    lon = ((F.col("event_id") * 7) % 2000) * 0.001
-    dist = geo.haversine_m(lat, lon, F.lit(1.0), F.lit(1.0))
+    one = SPARK.dbl(1.0)
+    dist = F.expr(geo.haversine_m(
+        SPARK, f"((event_id % 2000) * {SPARK.dbl(0.001)})",
+        f"(((event_id * 7) % 2000) * {SPARK.dbl(0.001)})", one, one))
     return (
         ev.select(F.col("event_id"), F.round(dist, 3).alias("dist_m"))
         .orderBy(F.asc("dist_m"), F.asc("event_id"))
@@ -436,12 +439,11 @@ def d1_date_kit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t1_text_kit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String function kit (§2.9): simple_name, tokenization count,
     capitalize-display — over part names."""
-    from ..functions import text as T
     part = _t(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
         T.simple_name(F.col("p_name")).alias("simple_name"),
-        F.size(T.tokenize_words(F.col("p_name"))).alias("n_words"),
+        F.expr(f"size({T.tokenize_words(SPARK, 'p_name')})").alias("n_words"),
         T.display_place_type(F.col("p_type")).alias("display_type"),
         F.concat_ws(",", F.col("p_brand"), F.col("p_name")).alias("joined_id"),
     )
@@ -474,7 +476,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "t1_text_kit": t1_text_kit,
 }
 
-_HAVERSINE = geo.haversine_m_sql
+_AB_DIST = geo.haversine_m(DUCKDB, "a.lat", "a.lon", "b.lat", "b.lon")
+_O1_DIST = geo.haversine_m(DUCKDB, "lat", "lon", "1.0", "1.0")
 
 ORACLES: dict[str, str] = {
     "s7_keys_scan": """
@@ -571,10 +574,10 @@ ORACLES: dict[str, str] = {
                      + ((event_id // 100000) % 140) * 2.5 AS lon
             FROM events)
         SELECT DISTINCT a.id AS probe_id, b.id AS match_id,
-               round({_HAVERSINE('a.lat', 'a.lon', 'b.lat', 'b.lon')}, 3) AS dist_m
+               round({_AB_DIST}, 3) AS dist_m
         FROM pts a, pts b
         WHERE a.id % 20 = 0 AND a.id <> b.id
-          AND round({_HAVERSINE('a.lat', 'a.lon', 'b.lat', 'b.lon')}, 3) < 150
+          AND round({_AB_DIST}, 3) < 150
     """,
     "j4_fuzzy_name_join": """
         SELECT a.p_partkey AS key_a, b.p_partkey AS key_b,
@@ -654,7 +657,7 @@ ORACLES: dict[str, str] = {
                    ((event_id * 7) % 2000) * 0.001 AS lon
             FROM events)
         SELECT event_id,
-               round({_HAVERSINE('lat', 'lon', '1.0', '1.0')}, 3) AS dist_m
+               round({_O1_DIST}, 3) AS dist_m
         FROM pts
         ORDER BY dist_m ASC, event_id ASC
         LIMIT 100
@@ -668,13 +671,11 @@ ORACLES: dict[str, str] = {
                    AS in_9_month_window
         FROM orders
     """,
-    "t1_text_kit": """
+    "t1_text_kit": f"""
         SELECT p_partkey,
                lower(regexp_replace(p_name, '[ -]', '', 'g')) AS simple_name,
-               CAST(len(list_filter(
-                   list_transform(string_split_regex(trim(p_name), '\\s+'),
-                                  w -> regexp_replace(w, '(^[!-/:-@\\[-`{-~]+)|([!-/:-@\\[-`{-~]+$)', '', 'g')),
-                   w -> w <> '')) AS INTEGER) AS n_words,
+               CAST(len({T.tokenize_words(DUCKDB, 'p_name')}) AS INTEGER)
+                   AS n_words,
                upper(substr(replace(p_type, '_', ' '), 1, 1)) ||
                    substr(replace(p_type, '_', ' '), 2) AS display_type,
                p_brand || ',' || p_name AS joined_id

@@ -15,7 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.geo import haversine_m_sql
+from ..functions import geo
+from ..functions.dialect import DUCKDB
+from ..sources.places import flat_snapshots_sql_ctes
 from ..sources.testdata import load_table
 
 
@@ -341,7 +343,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "s13_geojson_features": s13_geojson_features,
 }
 
-from ..sources.places import flat_snapshots_sql_ctes as _flat_ctes  # noqa: E402
 
 ORACLES: dict[str, str] = {
     "a8_rollup_status_priority": """
@@ -506,7 +507,7 @@ ORACLES: dict[str, str] = {
         GROUP BY user_id
     """,
     "s13_geojson_features": f"""
-        WITH {_flat_ctes()}
+        WITH {flat_snapshots_sql_ctes()}
         SELECT id,
                printf('{{"type":"Feature","geometry":{{"type":"Point",'
                       '"coordinates":[%.4f,%.4f]}},"properties":{{"name":"%s"}}}}',
@@ -645,7 +646,7 @@ def g5_way_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["g5_way_stats"] = g5_way_stats
 
-_G5_DIST = haversine_m_sql("d.lat", "d.lon", "m.mlat", "m.mlon")
+_G5_DIST = geo.haversine_m(DUCKDB, "d.lat", "d.lon", "m.mlat", "m.mlon")
 
 ORACLES["g5_way_stats"] = f"""
     WITH dedup AS (
@@ -805,10 +806,9 @@ def g6_points_in_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["o5_orthogonal_distance"] = o5_orthogonal_distance
 QUERIES["g6_points_in_triangle"] = g6_points_in_triangle
 
-from ..sources.places import flat_snapshots_sql_ctes as _fc2  # noqa: E402
 
 ORACLES["o5_orthogonal_distance"] = f"""
-    WITH {_fc2()},
+    WITH {flat_snapshots_sql_ctes()},
     proj AS (
         SELECT id,
                greatest(CAST(0.0 AS DOUBLE), least(CAST(1.0 AS DOUBLE),
@@ -828,7 +828,7 @@ ORACLES["o5_orthogonal_distance"] = f"""
 # (lat, lon) — clockwise in (x=lon, y=lat), so interior crosses are
 # all negative
 ORACLES["g6_points_in_triangle"] = f"""
-    WITH {_fc2()}
+    WITH {flat_snapshots_sql_ctes()}
     SELECT id FROM active
     WHERE ((20.0 - 0.0) * (lat - 0.0) - (40.0 - 0.0) * (lon - 0.0)) < 0
       AND ((45.0 - 20.0) * (lat - 40.0) - (10.0 - 40.0) * (lon - 20.0)) < 0
@@ -1095,7 +1095,7 @@ ORACLES["g10_spatial_join"] = f"""
          OR ((t.alat - t.clat2) * (p.lon - t.clon2)
              - (t.alon - t.clon2) * (p.lat - t.clat2)) > 0)
     )
-""".replace("{FLAT}", _fc2())
+""".replace("{FLAT}", flat_snapshots_sql_ctes())
 
 
 # ---------------------------------------------------------------------------
@@ -1565,7 +1565,7 @@ ORACLES["g15_border_zone"] = f"""
            round({_G15_DMIN}, 6) AS border_dist
     FROM active p, tri2 t
     WHERE {_G15_DMIN} <= CAST(2.0 AS DOUBLE)
-""".replace("{FLAT}", _fc2())
+""".replace("{FLAT}", flat_snapshots_sql_ctes())
 
 
 def x92_retract_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

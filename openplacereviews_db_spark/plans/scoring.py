@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions import hashing as H
 from ..sources.testdata import load_table
+from ..functions.dialect import SPARK
 
 # DuckDB mirrors of H.norm_text + whitespace split (see plans/corpus.py)
 _NORM = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
@@ -41,7 +42,7 @@ def _words_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, ws: array<string>) — the shared tokenization."""
     return _docs(spark, sf_dir).select(
         "doc_id",
-        F.filter(F.split(H.norm_text(F.col("text")), " "),
+        F.filter(F.split(F.expr(H.norm_text(SPARK, "text")), " "),
                  lambda w: w != "").alias("ws"))
 
 

@@ -23,6 +23,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import ids
+from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..operators import adaptive_split as AS
 from ..sources import staging
 from ..sources.testdata import load_table
@@ -170,38 +172,39 @@ def id_bytes_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     TEXT, not raw BINARY — the driver's pandas canonicalizer cannot
     hash bytearray cells (the r2 mm_feature_codes / r4 id_bytes failure
     class, now banned by the plan audit)."""
-    from ..functions import ids
     from ..sources import places as P
 
     pl = P.synthetic_places(spark, sf_dir)
-    key = F.conv(F.substring("suffix", 1, 6), 16, 10).cast("long")
-    base = pl.select(
-        ids.make_id(F.col("tile_id"), key % 2147483647).alias("place_id"))
+    base = pl.select(F.expr(_place_id(SPARK)).alias("place_id"))
+    as_bytes = ids.id_to_bytes(SPARK, "place_id")
     return base.select(
         "place_id",
-        F.lower(F.hex(ids.id_to_bytes(F.col("place_id"))))
-        .alias("id_bytes_hex"),
-        (ids.bytes_to_id(ids.id_to_bytes(F.col("place_id")))
-         == F.col("place_id")).alias("roundtrip_ok"),
+        F.expr(f"lower(hex({as_bytes}))").alias("id_bytes_hex"),
+        F.expr(f"({ids.bytes_to_id(SPARK, as_bytes)} = place_id)")
+        .alias("roundtrip_ok"),
     )
 
 
 QUERIES["id_bytes_roundtrip"] = id_bytes_roundtrip
 
 
+def _place_id(d: Dialect) -> str:
+    """A place's byte-compatible id: its tile plus an int suffix taken
+    from the first 6 hex digits of its md5 suffix."""
+    key = d.hex_to_bigint("substring(suffix, 1, 6)")
+    return ids.make_id(d, "tile_id", f"({key} % 2147483647)")
+
+
 def _id_roundtrip_oracle() -> str:
-    from ..functions import ids
     from ..sources import places as P
 
-    key = "(CAST('0x' || substr(suffix, 1, 6) AS BIGINT) % 2147483647)"
-    pid = ids.make_id_sql("tile_id", key)
+    as_bytes = ids.id_to_bytes(DUCKDB, "place_id")
     return f"""
     WITH {P.places_sql_cte()},
-    base AS (SELECT {pid} AS place_id FROM places)
+    base AS (SELECT {_place_id(DUCKDB)} AS place_id FROM places)
     SELECT place_id,
-           lower(to_hex({ids.id_to_bytes_sql('place_id')})) AS id_bytes_hex,
-           ({ids.bytes_to_id_sql(ids.id_to_bytes_sql('place_id'))}
-            = place_id) AS roundtrip_ok
+           lower(hex({as_bytes})) AS id_bytes_hex,
+           ({ids.bytes_to_id(DUCKDB, as_bytes)} = place_id) AS roundtrip_ok
     FROM base
 """
 

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import geo
+from ..functions.dialect import DUCKDB, SPARK, Dialect
 from .testdata import load_table, stage_plan
 
 #: one source.tripAdvisor element (TripAdvisorBot.java:58-65: a 2-part
@@ -78,17 +79,20 @@ PLACE_SCHEMA = T.StructType([
 DELETED_PLACE_TS = "2021-06-01T00:00:00"
 DELETED_OSM_TS = "2021-01-01T00:00:00"
 
-# closed-form coordinate derivation (mirrored in SQL below)
+# closed-form coordinate derivation (one SQL text for both engines; the
+# *_py functions compute it driver-side)
 _LAT_MUL, _LAT_MOD = 7919, 16000
 _LON_MUL, _LON_MOD = 104729, 36000
 
 
-def synthetic_lat(key: Column) -> Column:
-    return ((key * _LAT_MUL) % _LAT_MOD) / 100.0 - 80.0
+def synthetic_lat(d: Dialect, key: str = "c_custkey") -> str:
+    return (f"((({key} * {_LAT_MUL}) % {_LAT_MOD}) / {d.dbl(100.0)} "
+            f"- {d.dbl(80.0)})")
 
 
-def synthetic_lon(key: Column) -> Column:
-    return ((key * _LON_MUL) % _LON_MOD) / 100.0 - 180.0
+def synthetic_lon(d: Dialect, key: str = "c_custkey") -> str:
+    return (f"((({key} * {_LON_MUL}) % {_LON_MOD}) / {d.dbl(100.0)} "
+            f"- {d.dbl(180.0)})")
 
 
 def synthetic_lat_py(key: int) -> float:
@@ -117,7 +121,7 @@ def synthetic_places(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     c = load_table(spark, "customer", sf_dir)
     k = F.col("c_custkey")
-    lat, lon = synthetic_lat(k), synthetic_lon(k)
+    lat, lon = F.expr(synthetic_lat(SPARK)), F.expr(synthetic_lon(SPARK))
     ptype = F.lower(F.col("c_mktsegment"))
 
     def ref(idc: Column, deleted: Column | None) -> Column:
@@ -181,7 +185,7 @@ def synthetic_places(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.when(k % 2 == 0, F.array(trip_ref(0), trip_ref(1)))
                   .otherwise(F.array(trip_ref(0))))
     return c.select(
-        geo.olc_encode(lat, lon, 6).alias("tile_id"),
+        F.expr(synthetic_tile(SPARK)).alias("tile_id"),
         F.substring(F.md5(k.cast("string")), 1, 6).alias("suffix"),
         lat.alias("lat"), lon.alias("lon"),
         ptype.alias("placetype"),
@@ -192,6 +196,11 @@ def synthetic_places(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def synthetic_tile(d: Dialect) -> str:
+    """The 6-char OLC tile of a customer row's synthetic place."""
+    return geo.olc_encode(d, synthetic_lat(d), synthetic_lon(d), 6)
+
+
 def places_sql_cte() -> str:
     """DuckDB CTE producing the flat mirror of :func:`synthetic_places`.
 
@@ -199,11 +208,8 @@ def places_sql_cte() -> str:
     main_osm_id, version, n_osm) — main_osm_id already applies the P2
     main-element rule, which in this corpus reduces to the k%13 case.
     """
-    lat = (f"(((c_custkey * {_LAT_MUL}) % {_LAT_MOD})"
-           " / CAST(100.0 AS DOUBLE) - CAST(80.0 AS DOUBLE))")
-    lon = (f"(((c_custkey * {_LON_MUL}) % {_LON_MOD})"
-           " / CAST(100.0 AS DOUBLE) - CAST(180.0 AS DOUBLE))")
-    tile = geo.olc_encode_sql(lat, lon, 6)
+    lat, lon = synthetic_lat(DUCKDB), synthetic_lon(DUCKDB)
+    tile = synthetic_tile(DUCKDB)
     return f"""
     places AS (
         SELECT {tile} AS tile_id,
@@ -237,13 +243,14 @@ def synthetic_active_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Live flat view: one row per live place with merge-relevant fields."""
     c = load_table(spark, "customer", sf_dir)
     k = F.col("c_custkey")
-    lat, lon = synthetic_lat(k), synthetic_lon(k)
+    tile = F.expr(synthetic_tile(SPARK))
     name = F.concat_ws(" ", F.col("c_name"), F.lower(F.col("c_mktsegment")))
     return c.where(~(k % 11 == 0)).select(
-        F.concat_ws(",", geo.olc_encode(lat, lon, 6),
+        F.concat_ws(",", tile,
                     F.substring(F.md5(k.cast("string")), 1, 6)).alias("id"),
-        geo.olc_encode(lat, lon, 6).alias("tile_id"),
-        lat.alias("lat"), lon.alias("lon"),
+        tile.alias("tile_id"),
+        F.expr(synthetic_lat(SPARK)).alias("lat"),
+        F.expr(synthetic_lon(SPARK)).alias("lon"),
         name.alias("name"),
         F.when(k % 10 == 0,
                F.concat(F.lit("Q"), k.cast("string"))).alias("wikidata"),
@@ -265,8 +272,8 @@ def synthetic_closed_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     c = load_table(spark, "customer", sf_dir)
     k = F.col("c_custkey")
-    lat = synthetic_lat(k) + ((k % 19) - 9).cast("double") * F.lit(_JITTER_DEG)
-    lon = synthetic_lon(k) + ((k % 23) - 11).cast("double") * F.lit(_JITTER_DEG)
+    lat_s, lon_s = synthetic_closed_lat_lon(SPARK)
+    lat, lon = F.expr(lat_s), F.expr(lon_s)
     aname = F.concat_ws(" ", F.col("c_name"), F.lower(F.col("c_mktsegment")))
     name = (
         F.when(k % 4 == 0, aname)
@@ -278,7 +285,7 @@ def synthetic_closed_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return c.where(k % 3 == 0).select(
         F.concat(F.lit("c"), k.cast("string")).alias("id"),
-        geo.olc_encode(lat, lon, 6).alias("tile_id"),
+        F.expr(geo.olc_encode(SPARK, lat_s, lon_s, 6)).alias("tile_id"),
         lat.alias("lat"), lon.alias("lon"),
         name.alias("name"),
         F.when(k % 10 == 0,
@@ -292,16 +299,21 @@ def synthetic_closed_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def synthetic_closed_lat_lon(d: Dialect) -> tuple[str, str]:
+    """A closed place's coordinates: its live ones jittered by up to
+    ±9 / ±11 steps of ``_JITTER_DEG``."""
+    def jitter(v: str, mod: int) -> str:
+        return (f"({v} + (CAST(((c_custkey % {mod}) - {mod // 2}) AS DOUBLE)"
+                f" * {d.dbl(_JITTER_DEG)}))")
+    return jitter(synthetic_lat(d), 19), jitter(synthetic_lon(d), 23)
+
+
 def flat_snapshots_sql_ctes() -> str:
     """DuckDB CTEs `active` and `closed` mirroring the two frames above."""
-    lat = ("(((c_custkey * {m}) % {md}) / CAST(100.0 AS DOUBLE) - "
-           "CAST({off}.0 AS DOUBLE))")
-    alat = lat.format(m=_LAT_MUL, md=_LAT_MOD, off=80)
-    alon = lat.format(m=_LON_MUL, md=_LON_MOD, off=180)
-    clat = (f"({alat} + ((c_custkey % 19) - 9) * CAST(1e-4 AS DOUBLE))")
-    clon = (f"({alon} + ((c_custkey % 23) - 11) * CAST(1e-4 AS DOUBLE))")
-    atile = geo.olc_encode_sql(alat, alon, 6)
-    ctile = geo.olc_encode_sql(clat, clon, 6)
+    alat, alon = synthetic_lat(DUCKDB), synthetic_lon(DUCKDB)
+    clat, clon = synthetic_closed_lat_lon(DUCKDB)
+    atile = synthetic_tile(DUCKDB)
+    ctile = geo.olc_encode(DUCKDB, clat, clon, 6)
     aname = "(c_name || ' ' || lower(c_mktsegment))"
     cname = (f"(CASE WHEN c_custkey % 4 = 0 THEN {aname} "
              f"WHEN c_custkey % 4 = 1 THEN (lower(c_mktsegment) || ' ' || c_name) "

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import staging
+from ..functions.dialect import SPARK
 
 #: schema of the driver's events table, as a streaming source
 EVENTS_DDL = ("event_id long, ts timestamp, user_id long, "
@@ -718,8 +719,8 @@ def _neardup_batch(index_dir: str, pairs_dir: str, shingle_words: int,
     # per-stream constants hoisted out of the per-batch body: one
     # parsed band expression (unresolved Columns are reusable across
     # frames) — the r14 construction rule (~5 ms py4j RTT on this box)
-    bands_sql = H.lsh_bands_sql(
-        f"array({', '.join(f'h{i}' for i in range(num_hashes))})",
+    bands_sql = H.lsh_bands(
+        SPARK, f"array({', '.join(f'h{i}' for i in range(num_hashes))})",
         bands, num_hashes // bands)
 
     def verify(cand: DataFrame, sets: DataFrame) -> DataFrame:
@@ -905,7 +906,8 @@ def _exact_dedup_batch(index_dir: str, counts_dir: str):
             return  # retried, already-committed epoch: exact no-op
         spark = batch.sparkSession
         firsts = (batch
-                  .select("doc_id", H.fingerprint(F.col("text")).alias("fp"))
+                  .select("doc_id",
+                          F.expr(H.fingerprint(SPARK, "text")).alias("fp"))
                   .groupBy("fp")
                   .agg(F.min("doc_id").alias("keep_id"),
                        F.count(F.lit(1)).alias("c")))

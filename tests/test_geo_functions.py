@@ -7,6 +7,7 @@ import random
 from pyspark.sql import functions as F
 
 from openplacereviews_db_spark.functions import geo
+from openplacereviews_db_spark.functions.dialect import DUCKDB, SPARK
 
 POINTS = [
     (48.8584, 2.2945),       # Eiffel (public OLC 8FW4V75V… → 6-char 8FW4V7)
@@ -29,8 +30,8 @@ def test_olc_three_way_parity(spark, duck):
     py = [geo.olc_encode_py(a, b) for a, b in pts]
     df = spark.createDataFrame(pts, "lat double, lon double")
     col = [r[0] for r in df.select(
-        geo.olc_encode(F.col("lat"), F.col("lon"))).collect()]
-    sql = geo.olc_encode_sql("lat", "lon")
+        F.expr(geo.olc_encode(SPARK, "lat", "lon"))).collect()]
+    sql = geo.olc_encode(DUCKDB, "lat", "lon")
     duckv = [r[0] for r in duck.execute(
         f"SELECT {sql} FROM (SELECT unnest($1::DOUBLE[]) lat, "
         "unnest($2::DOUBLE[]) lon)",
@@ -50,8 +51,8 @@ def test_haversine_reference_constants(spark):
     # OsmMapUtils.java:100); value pinned from the formula itself
     df = spark.createDataFrame([POINTS[0] + POINTS[5]],
                                "lat1 double, lon1 double, lat2 double, lon2 double")
-    d = df.select(geo.haversine_m(
-        F.col("lat1"), F.col("lon1"), F.col("lat2"), F.col("lon2"))
+    d = df.select(F.expr(geo.haversine_m(
+        SPARK, "lat1", "lon1", "lat2", "lon2"))
         .alias("d")).collect()[0]["d"]
     assert abs(d - 9345549.9065) < 1.0  # formula-pinned to the meter
 

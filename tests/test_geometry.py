@@ -7,6 +7,7 @@ import math
 from pyspark.sql import functions as F
 
 from openplacereviews_db_spark.functions import geometry as G
+from openplacereviews_db_spark.functions.dialect import DUCKDB, SPARK
 
 SQUARE = [(0.0, 0.0), (0.0, 1.0), (1.0, 1.0), (1.0, 0.0)]  # (lat, lon)
 SQUARE_CLOSED = SQUARE + [SQUARE[0]]
@@ -87,10 +88,10 @@ def test_mercator_matches_duckdb(spark, duck):
            (0.0, 0.0)]
     df = spark.createDataFrame(pts, "lat double, lon double")
     got = [(r["x"], r["y"]) for r in df.select(
-        G.mercator_tile_x(F.col("lon"), 12).alias("x"),
-        G.mercator_tile_y(F.col("lat"), 12).alias("y")).collect()]
-    sql = (f"SELECT {G.mercator_tile_x_sql('lon', 12)} AS x, "
-           f"{G.mercator_tile_y_sql('lat', 12)} AS y "
+        F.expr(G.mercator_tile_x(SPARK, "lon", 12)).alias("x"),
+        F.expr(G.mercator_tile_y(SPARK, "lat", 12)).alias("y")).collect()]
+    sql = (f"SELECT {G.mercator_tile_x(DUCKDB, 'lon', 12)} AS x, "
+           f"{G.mercator_tile_y(DUCKDB, 'lat', 12)} AS y "
            "FROM (SELECT unnest($1::DOUBLE[]) lat, unnest($2::DOUBLE[]) lon)")
     want = duck.execute(sql, [[p[0] for p in pts],
                               [p[1] for p in pts]]).fetchall()
@@ -109,7 +110,7 @@ def test_zorder_interleave_bits(spark):
         [(0, 0), (3, 0), (0, 3), (3, 3), (65535, 65535)],
         "qx long, qy long")
     got = [r["z"] for r in df.select(
-        GM.zorder_interleave(F.col("qx"), F.col("qy")).alias("z"))
+        F.expr(GM.zorder_interleave(SPARK, "qx", "qy")).alias("z"))
         .collect()]
     assert got == [0, 0b0101, 0b1010, 0b1111, (1 << 32) - 1]
 
@@ -127,10 +128,10 @@ def test_zorder_prefix_is_spatial(spark):
         "name string, lat double, lon double")
     q = pts.select(
         "name",
-        GM.zorder_quantize_lon(F.col("lon")).alias("qx"),
-        GM.zorder_quantize_lat(F.col("lat")).alias("qy"))
+        F.expr(GM.zorder_quantize_lon(SPARK, "lon")).alias("qx"),
+        F.expr(GM.zorder_quantize_lat(SPARK, "lat")).alias("qy"))
     z = {r["name"]: r["z"] for r in q.select(
-        "name", GM.zorder_interleave(F.col("qx"), F.col("qy")).alias("z"))
+        "name", F.expr(GM.zorder_interleave(SPARK, "qx", "qy")).alias("z"))
         .collect()}
     assert z["a1"] >> 12 == z["a2"] >> 12      # 50 m: top 20 bits agree
     assert z["a1"] >> 28 != z["far"] >> 28     # other hemisphere: differ

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from openplacereviews_db_spark.functions import text as TX
+from openplacereviews_db_spark.functions.dialect import DUCKDB, SPARK
 from openplacereviews_db_spark.operators import changelog as C
 from openplacereviews_db_spark.operators import cluster, place_merge
 from openplacereviews_db_spark.sources import places as P
@@ -37,55 +38,13 @@ CASES = [
 def test_check_names_spark(spark):
     df = spark.createDataFrame(CASES, "a string, b string, want boolean")
     got = df.select("a", "b", "want",
-                    TX.check_names(F.col("a"), F.col("b")).alias("got"))
+                    F.expr(TX.check_names(SPARK, "a", "b")).alias("got"))
     bad = [r for r in got.collect() if bool(r["got"]) != r["want"]]
     assert not bad, bad
 
 
-def test_check_names_expr_matches_column(spark):
-    """The SQL expression-string cascade (one F.expr parse; the r14
-    plan-construction optimization) must stay value-identical to the
-    Column builder on the truth table plus null/empty edges."""
-    edge = [(None, "x", None), ("x", None, None), (None, None, None),
-            ("", "", None), ("  ", "x", None), ("...", "...", None)]
-    rows = [(a, b) for a, b, _ in CASES] + [(a, b) for a, b, _ in edge]
-    df = spark.createDataFrame(rows, "a string, b string")
-    got = df.select(
-        TX.check_names(F.col("a"), F.col("b")).alias("col_v"),
-        F.expr(TX.check_names_expr("a", "b")).alias("expr_v")).collect()
-    assert [r["col_v"] for r in got] == [r["expr_v"] for r in got]
-
-
-def test_match_type_expr_matches_column(spark):
-    schema = ("c_name string, a_name string, c_wikidata string, "
-              "a_wikidata string, c_website string, a_website string, "
-              "c_alt array<string>, a_alt array<string>")
-    rows = [
-        ("Blue Cafe", "Cafe Blue", None, None, None, None, [], []),
-        (None, None, "Q7", "Q7", None, None, [], []),
-        ("Zeta", "Omega", None, None, "u", "u", [], []),
-        ("Zeta", "Omega", None, None, None, None, ["Old Name"], ["Old Name"]),
-        (None, "Name appeared", None, None, None, None, [], []),
-        ("x", None, None, None, None, None, [], []),          # b-empty only: null
-        ("", "  ", "", "", "", "", None, None),
-        ("Café", "Cafe", None, "Q7", "Q7", None, [], []),
-        ("Alpha", "Omega", None, None, None, None, ["a"], ["b"]),
-    ]
-    df = spark.createDataFrame(rows, schema)
-    col_v = place_merge.match_type_col(
-        F.col("c_name"), F.col("a_name"),
-        F.col("c_wikidata"), F.col("a_wikidata"),
-        F.col("c_website"), F.col("a_website"),
-        F.col("c_alt"), F.col("a_alt"))
-    expr_v = F.expr(place_merge.match_type_expr(
-        "c_name", "a_name", "c_wikidata", "a_wikidata",
-        "c_website", "a_website", "c_alt", "a_alt"))
-    got = df.select(col_v.alias("col_v"), expr_v.alias("expr_v")).collect()
-    assert [r["col_v"] for r in got] == [r["expr_v"] for r in got]
-
-
 def test_check_names_matches_duckdb(spark, duck):
-    sql = ("SELECT " + TX.check_names_sql("a", "b")
+    sql = ("SELECT " + TX.check_names(DUCKDB, "a", "b")
            + " FROM (SELECT unnest($1::VARCHAR[]) a, unnest($2::VARCHAR[]) b)")
     duck_rows = duck.execute(
         sql, [[c[0] for c in CASES], [c[1] for c in CASES]]).fetchall()

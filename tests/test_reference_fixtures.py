@@ -31,9 +31,10 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from openplacereviews_db_spark.functions.dialect import SPARK
 from openplacereviews_db_spark.operators import changelog
 from openplacereviews_db_spark.operators.place_merge import (
-    MATCH_EMPTY, match_type_col,
+    MATCH_EMPTY, match_type,
 )
 
 REF_DIR = os.environ.get("OPR_REFERENCE_DIR", "/root/reference")
@@ -100,12 +101,10 @@ def _cascade_df(spark, pairs):
         "c_alt array<string>, a_alt array<string>")
     return df.select(
         "idx",
-        match_type_col(
-            F.col("c_name"), F.col("a_name"),
-            F.col("c_wikidata"), F.col("a_wikidata"),
-            F.col("c_website"), F.col("a_website"),
-            F.col("c_alt"), F.col("a_alt"),
-        ).alias("match_type"))
+        F.expr(match_type(
+            SPARK, "c_name", "a_name", "c_wikidata", "a_wikidata",
+            "c_website", "a_website", "c_alt", "a_alt",
+        )).alias("match_type"))
 
 
 def test_reference_merge_pairs_all_match(spark):

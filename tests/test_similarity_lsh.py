@@ -218,6 +218,7 @@ def test_minhash_family_matches_python_reference(spark, duck):
     from pyspark.sql import functions as F
 
     from openplacereviews_db_spark.functions import hashing as H
+    from openplacereviews_db_spark.functions.dialect import DUCKDB, SPARK
 
     texts = ["the quick brown fox", "café déjà vu", "x", "",
              "a b c d e f g", "1234567890"]
@@ -229,9 +230,10 @@ def test_minhash_family_matches_python_reference(spark, duck):
         return (H.minhash_a(i) * b + H.minhash_b(i)) % H.MINHASH_P
 
     df = spark.createDataFrame([(t,) for t in texts], "s string")
+    base = H.minhash_base(SPARK, "s")
     got = df.select(
-        "s", H.minhash_base(F.col("s")).alias("b"),
-        *[H.minhash_perm(i, H.minhash_base(F.col("s"))).alias(f"h{i}")
+        "s", F.expr(base).alias("b"),
+        *[F.expr(H.minhash_perm(SPARK, str(i), base)).alias(f"h{i}")
           for i in (0, 7, 15)]).collect()
     for r in got:
         b = py_base(r["s"])
@@ -241,8 +243,9 @@ def test_minhash_family_matches_python_reference(spark, duck):
     # and DuckDB computes the identical integers from the same SQL text
     for t in texts:
         row = duck.execute(
-            f"SELECT {H.minhash_base_sql('?')} AS b, "
-            f"{H.minhash_perm_sql('7', H.minhash_base_sql('?'))} AS h7",
+            f"SELECT {H.minhash_base(DUCKDB, '?')} AS b, "
+            f"{H.minhash_perm(DUCKDB, '7', H.minhash_base(DUCKDB, '?'))}"
+            " AS h7",
             [t, t]).fetchone()
         assert row[0] == py_base(t) and row[1] == py_perm(7, py_base(t)), t
 
@@ -406,27 +409,31 @@ def test_jaccard_ge_exact_threshold_boundary(spark):
     from pyspark.sql import functions as F
 
     from openplacereviews_db_spark.functions import hashing as H
+    from openplacereviews_db_spark.functions.dialect import SPARK
 
     df = spark.createDataFrame(
         [(["a", "b", "c"], ["a", "b", "d"]),   # inter=2 S=6 j=2/4=0.5
          (["a", "x", "y"], ["a", "p", "q"])],  # inter=1 S=6 j=1/5=0.2
         "sa array<string>, sb array<string>")
     got = [r[0] for r in df.select(
-        H.jaccard_ge(F.col("sa"), F.col("sb"), 0.5)).collect()]
+        F.expr(H.jaccard_ge(SPARK, "sa", "sb", 0.5))).collect()]
     assert got == [True, False]
 
 
 def test_jaccard_family_sql_matches_column(spark):
-    """The r14 SQL-string forms (jaccard_sql / jaccard_ge_sql /
-    jaccard_prebound_sql / sid16_set_sql / lsh_bands_sql) must evaluate
-    identically to the Column forms they replace on the edge cases:
-    empty arrays, disjoint, identical, exact-threshold, near-threshold
-    both sides, and negative hash ids (sid16 sign extension)."""
+    """The jaccard / jaccard_ge / jaccard_prebound / lsh_bands /
+    sid16_set_sql helpers must equal exact Python references on the
+    edge cases: empty arrays, disjoint, identical, exact-threshold,
+    near-threshold both sides, and negative hash ids (sid16 sign
+    extension)."""
+    import hashlib
+    from fractions import Fraction
+
     from pyspark.sql import functions as F
 
     from openplacereviews_db_spark.functions import hashing as H
-    from openplacereviews_db_spark.operators.dedup import (sid16_set,
-                                                           sid16_set_sql)
+    from openplacereviews_db_spark.functions.dialect import SPARK
+    from openplacereviews_db_spark.operators.dedup import sid16_set_sql
 
     rows = [
         ([], []),                              # both empty (union 0)
@@ -438,35 +445,40 @@ def test_jaccard_family_sql_matches_column(spark):
         ([1, 2, 3, 4, 5, 6], [7, 8, 9, 10, 1, 11]),  # j = 1/11 < 0.1
         ([-(2**63) + 7, -1, 2**62], [-1, 5, -(2**63) + 7]),  # negatives
     ]
+
+    def ref(sa, sb, t):
+        i = len(set(sa) & set(sb))
+        u = len(sa) + len(sb) - i
+        j = Fraction(i, u) if u else Fraction(0)
+        t8 = round(t * 1e8) - 50
+        # round(j, 6) HALF_UP >= t, on the exact rational
+        ge = (j * 10**6 + Fraction(1, 2)) // 1 >= round(t * 10**6)
+        return float(j), ge, i * (10**8 + t8) >= t8 * (len(sa) + len(sb))
+
+    def sid16(sa):
+        return sorted({(x & 0xFFFF) - ((x & 0x8000) << 1) for x in sa})
+
     df = spark.createDataFrame(rows, "sa array<bigint>, sb array<bigint>")
     for t in (0.1, 0.5, 0.9):
         got = df.select(
-            H.jaccard(F.col("sa"), F.col("sb")).alias("c_j"),
-            F.expr(H.jaccard_sql("sa", "sb")).alias("e_j"),
-            H.jaccard_ge(F.col("sa"), F.col("sb"), t).alias("c_ge"),
-            F.expr(H.jaccard_ge_sql("sa", "sb", t)).alias("e_ge"),
-            H.jaccard_prebound(
-                F.size(F.array_intersect("sa", "sb")), F.size("sa"),
-                F.size("sb"), t).alias("c_pre"),
-            F.expr(H.jaccard_prebound_sql(
-                "size(array_intersect(sa, sb))", "size(sa)", "size(sb)",
-                t)).alias("e_pre"),
-            F.sort_array(sid16_set(F.col("sa"))).alias("c_16"),
-            F.sort_array(F.expr(sid16_set_sql("sa"))).alias("e_16"),
+            F.expr(H.jaccard(SPARK, "sa", "sb")).alias("j"),
+            F.expr(H.jaccard_ge(SPARK, "sa", "sb", t)).alias("ge"),
+            F.expr(H.jaccard_prebound(
+                SPARK, "size(array_intersect(sa, sb))", "size(sa)",
+                "size(sb)", t)).alias("pre"),
+            F.sort_array(F.expr(sid16_set_sql("sa"))).alias("s16"),
         ).collect()
-        for r in got:
-            assert r["c_j"] == r["e_j"], (t, r)
-            assert r["c_ge"] == r["e_ge"], (t, r)
-            assert r["c_pre"] == r["e_pre"], (t, r)
-            assert r["c_16"] == r["e_16"], (t, r)
-    sig = spark.createDataFrame(
-        [([str(i * 37) for i in range(16)],), ([None] * 16,)],
-        "hs array<string>")
-    bands = sig.select(
-        H.lsh_bands(F.col("hs").cast("array<string>"), 8, 2).alias("c"),
-        F.expr(H.lsh_bands_sql("hs", 8, 2)).alias("e")).collect()
-    for r in bands:
-        assert r["c"] == r["e"], r
+        for (sa, sb), r in zip(rows, got):
+            assert (r["j"], r["ge"], r["pre"]) == ref(sa, sb, t), (t, r)
+            assert r["s16"] == sid16(sa), (t, r)
+    sigs = [[str(i * 37) for i in range(16)], [None] * 16]
+    sig = spark.createDataFrame([(h,) for h in sigs], "hs array<string>")
+    bands = sig.select(F.expr(H.lsh_bands(SPARK, "hs", 8, 2))).collect()
+    for hs, r in zip(sigs, bands):
+        want = [f"{b}|" + hashlib.md5(",".join(
+            x for x in hs[2 * b:2 * b + 2] if x is not None).encode()
+        ).hexdigest() for b in range(8)]
+        assert r[0] == want, r
 
 
 def test_exploded_shingles_expr_matches_word_shingles(spark):
@@ -493,7 +505,7 @@ def test_exploded_shingles_expr_matches_word_shingles(spark):
             (r["doc_id"], s)
             for r in docs.select(
                 "doc_id",
-                H.word_shingles(F.col("text"), n).alias("sh")).collect()
+                H.word_shingles("text", n).alias("sh")).collect()
             for s in r["sh"])
         assert got == want, n
     # extra_cols: shingles must build per (id, extra) copy independently

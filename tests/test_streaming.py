@@ -286,13 +286,14 @@ def test_exact_dedup_stream_cross_batch_first_seen(spark, tmp_path):
               .groupBy("fp").agg(F.sum("c").alias("n")).collect())
     n_by_fp = {r["fp"]: r["n"] for r in counts}
 
+    from openplacereviews_db_spark.functions.dialect import SPARK
     from openplacereviews_db_spark.functions.hashing import fingerprint
     fp_of = {t: r["fp"] for t, r in zip(
         ["aaa bbb ccc", "unique zero", "xyz qqq", "unique two"],
         spark.createDataFrame(
             [("aaa bbb ccc",), ("unique zero",), ("xyz qqq",),
              ("unique two",)], "text string")
-        .select(fingerprint(F.col("text")).alias("fp")).collect())}
+        .select(F.expr(fingerprint(SPARK, "text")).alias("fp")).collect())}
 
     # first-seen wins: doc 10 (batch 0) beats docs 2 and 1
     assert kept[fp_of["aaa bbb ccc"]] == 10

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from openplacereviews_db_spark.functions import text as TX
+from openplacereviews_db_spark.functions.dialect import SPARK
 
 
 def _one(spark, col):
@@ -19,7 +20,8 @@ def test_simple_name(spark):
 
 
 def test_tokenize_trims_punct(spark):
-    got = _one(spark, TX.tokenize_words(F.lit('  "Le Café!"  (No.1)  ')))
+    got = _one(spark, F.expr(TX.tokenize_words(
+        SPARK, SPARK.lit('  "Le Café!"  (No.1)  '))))
     assert got == ["Le", "Café", "No.1"]
 
 
@@ -30,7 +32,8 @@ def test_tokenize_trims_punct(spark):
     ("abcdefghi", "abcdefghij", 4),
 ])
 def test_lev_threshold(spark, a, b, want):
-    assert _one(spark, TX.lev_threshold(F.lit(a), F.lit(b))) == want
+    assert _one(spark, F.expr(TX.lev_threshold(
+        SPARK, SPARK.lit(a), SPARK.lit(b)))) == want
 
 
 def test_first_not_empty(spark):
@@ -44,7 +47,8 @@ def test_display_place_type(spark):
 
 
 def test_normalized_accent_fold(spark):
-    assert _one(spark, TX.normalized(F.lit("Crème Brûlée"))) == "creme brulee"
+    assert _one(spark, F.expr(TX.normalized(
+        SPARK, SPARK.lit("Crème Brûlée")))) == "creme brulee"
 
 
 def test_o2_label_sort_matches_java_natural_order(spark):
@@ -93,7 +97,7 @@ def test_url_canonicalize_truth_table(spark):
     ]
     df = spark.createDataFrame([(u,) for u, _ in cases], "url string")
     got = [r[0] for r in
-           df.select(url_canonicalize(F.col("url"))).collect()]
+           df.select(F.expr(url_canonicalize(SPARK, "url"))).collect()]
     assert got == [want for _, want in cases]
 
 
@@ -116,8 +120,8 @@ def test_url_canonicalize_is_idempotent(spark):
         frag = ["", "#x"][i % 2]
         urls.append((f"{scheme}://{host}{path}{q}{frag}",))
     df = spark.createDataFrame(urls, "url string")
-    once = df.select(url_canonicalize(F.col("url")).alias("c1"))
+    once = df.select(F.expr(url_canonicalize(SPARK, "url")).alias("c1"))
     twice = once.select(F.col("c1"),
-                        url_canonicalize(F.col("c1")).alias("c2"))
+                        F.expr(url_canonicalize(SPARK, "c1")).alias("c2"))
     bad = twice.where(F.col("c1") != F.col("c2")).collect()
     assert not bad, bad[:5]
